@@ -60,10 +60,11 @@ def heavy_hitters_stream(
     """Per-shard Misra-Gries heavy hitters over a stream.
 
     Emits each shard's full sketch every micro-batch (update mode):
-    ``(shard, key, est_count, max_err, batch_seq)``; collapse with
-    :func:`final_sketch` after the run. State per shard is exactly
-    ``capacity`` counters + one decrement total — bounded regardless of
-    key cardinality or stream length.
+    ``(shard, key, est_count, max_err, batch_seq)``; a sketch that
+    eviction has emptied emits one key-less row (``key`` null,
+    ``est_count`` 0). Collapse with :func:`final_sketch` after the run.
+    State per shard is exactly ``capacity`` counters + one decrement
+    total — bounded regardless of key cardinality or stream length.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -87,16 +88,18 @@ def heavy_hitters_stream(
         seq += 1
         ks = sorted(sketch)  # deterministic state + emission order
         state.update((ks, [sketch[k] for k in ks], dec, seq))
+        # an emptied sketch still emits (one key-less row) so this batch_seq
+        # supersedes the shard's older rows in final_sketch
         yield pd.DataFrame(
             [
                 {
                     "shard": key[0],
                     "key": k,
-                    "est_count": sketch[k],
+                    "est_count": sketch.get(k, 0),
                     "max_err": dec,
                     "batch_seq": seq,
                 }
-                for k in ks
+                for k in ks or [None]
             ]
         )
 
@@ -494,14 +497,16 @@ def windowed_heavy_hitters_stream(
 def final_sketch(update_log: DataFrame) -> DataFrame:
     """Collapse the update-mode emission log to each shard's FINAL sketch:
     rows from the shard's highest batch_seq (keys evicted earlier are
-    correctly absent). Shards partition the key space, so the union of
-    final shard sketches IS the global sketch."""
+    correctly absent), minus the key-less row an emptied sketch emits.
+    Shards partition the key space, so the union of final shard sketches
+    IS the global sketch."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("shard")
     return (
         update_log.withColumn("__max_seq", F.max("batch_seq").over(w))
         .where(F.col("batch_seq") == F.col("__max_seq"))
+        .where(F.col("key").isNotNull())
         .select("shard", "key", "est_count", "max_err")
     )
 
