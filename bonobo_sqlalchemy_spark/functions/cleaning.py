@@ -49,22 +49,6 @@ def redact_pii(text: str | Column) -> Column:
     return out
 
 
-def positional_bigrams(words_col: str | Column) -> Column:
-    """All positional (non-distinct) word bigrams as an array column.
-
-    Kept as an array only for small per-row uses; corpus-scale repetition
-    metrics explode the positions instead (see queries/datapipe3.py) to
-    stay inside codegen.
-    """
-    w = col_(words_col)
-    idx = F.when(
-        F.size(w) >= 2, F.sequence(F.lit(1), F.size(w) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx, lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1))
-    )
-
-
 def strip_shared_chunks(
     docs: "DataFrame",
     text_col: str = "text",

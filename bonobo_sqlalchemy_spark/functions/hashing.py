@@ -1,14 +1,12 @@
-"""Hash-sketch helpers: permutation parameters for MinHash, plus legacy
-xxhash64-based sketch columns.
+"""Hash-sketch helpers shared by the dedup operators: permutation
+parameters for MinHash and the Hamming distance of 64-bit SimHash
+signatures.
 
-The dedup operators' production sketch paths (``operators/dedup.py``) use
-md5-derived base hashes so the ENTIRE pipeline is reproducible in DuckDB —
-`dedup_minhash_lsh` and `dedup_simhash` carry exact value-level oracles as
-of round 4; they import only `_perm_params` / `_MERSENNE_P` / `hamming64`
-from here. The xxhash64 array-lambda sketch columns below are the
-documentation/reference form (interpreted, small-data only — the codegen
-explode+aggregate shape in dedup.py is the corpus-scale path) and back the
-property tests.
+The production sketch paths (``operators/dedup.py``) use md5-derived base
+hashes so the ENTIRE pipeline is reproducible in DuckDB —
+`dedup_minhash_lsh` and `dedup_simhash` carry exact value-level oracles;
+the sketches themselves are codegen explode + aggregate plans there, not
+array-lambda columns.
 """
 
 from __future__ import annotations
@@ -31,88 +29,6 @@ def _perm_params(k: int, seed: int = 7) -> list[tuple[int, int]]:
         b = state % (1 << 31)
         out.append((a, b))
     return out
-
-
-def minhash_signature(shingles: str | Column, k: int = 32, seed: int = 7) -> Column:
-    """k-permutation MinHash signature over a (distinct) shingle array.
-
-    h_i(s) = (a_i * xxhash64(s) + b_i) mod (2^61-1); signature element i is
-    the min over the document's shingles. Arithmetic stays in longs — the
-    modulus keeps products in range (hash folded to 31 bits first).
-
-    NOTE: array-lambda form, convenient for small/ad-hoc data. Spark
-    interprets nested higher-order lambdas (~8us/element measured), so for
-    corpus-scale signatures use the explode + xxhash64 + k MIN-aggregates
-    plan in ``operators/dedup.py::minhash_lsh_pairs`` — it stays inside
-    whole-stage codegen and is ~100x faster for identical output.
-    """
-    c = F.col(shingles) if isinstance(shingles, str) else shingles
-    base = F.transform(c, lambda s: F.abs(F.xxhash64(s)) % F.lit(1 << 31))
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _perm_params(k, seed)
-        ]
-    )
-    return F.transform(
-        params,
-        lambda p: F.array_min(
-            F.transform(base, lambda h: (p["a"] * h + p["b"]) % F.lit(_MERSENNE_P))
-        ),
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """Split a MinHash signature into band-bucket keys: array of
-    'band_idx:joined-slice' strings. Docs sharing any band key are
-    candidate pairs (the standard banding technique). One expression —
-    the signature is referenced once per band, not once per element."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat_ws(
-            ":",
-            b.cast("string"),
-            F.concat_ws(
-                ",",
-                F.transform(F.slice(signature, b * rows + 1, rows), lambda v: v.cast("string")),
-            ),
-        ),
-    )
-
-
-def token_hashes(tokens: str | Column) -> Column:
-    """xxhash64 of each token. Array-lambda form — for corpus-scale SimHash
-    use the explode + per-bit SUM-aggregate plan in
-    ``operators/dedup.py::simhash_pairs`` (whole-stage codegen)."""
-    c = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.transform(c, lambda t: F.xxhash64(t))
-
-
-def simhash64_from_hashes(hashes: str | Column) -> Column:
-    """64-bit SimHash from a (materialized) token-hash array: per-bit
-    majority vote, all JVM-side aggregates."""
-    c = F.col(hashes) if isinstance(hashes, str) else hashes
-    result = F.lit(0).cast("bigint")
-    for bit in range(64):
-        votes = F.aggregate(
-            c,
-            F.lit(0).cast("bigint"),
-            lambda a, h: a
-            + F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(
-                F.lit(-1)
-            ),
-        )
-        # shiftleft wraps at bit 63 (sign bit) instead of overflowing a literal
-        result = result + F.when(
-            votes > 0, F.shiftleft(F.lit(1).cast("bigint"), bit)
-        ).otherwise(F.lit(0))
-    return result
-
-
-def simhash64(tokens: str | Column) -> Column:
-    """Convenience composition — prefer materializing :func:`token_hashes`
-    first in set-scale plans (see simhash_pairs operator)."""
-    return simhash64_from_hashes(token_hashes(tokens))
 
 
 def hamming64(a: Column, b: Column) -> Column:

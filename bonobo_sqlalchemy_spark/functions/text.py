@@ -40,23 +40,6 @@ def n_tokens(text: str | Column) -> Column:
     return F.size(words(text)).cast("bigint")
 
 
-def word_ngrams(text: str | Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined) as an array column.
-
-    Note: the ``transform`` lambda runs interpreted (~8µs/element), so for
-    corpus-scale shingling prefer the codegen explode pipeline in
-    ``operators.dedup._exploded_shingles``; this column form is for small
-    per-row uses."""
-    w = words(text)
-    count = F.size(w)
-    idx = F.when(count >= n, F.sequence(F.lit(0), count - F.lit(n))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)))
-    )
-
-
 def occurrence_count(text: str | Column, needle: str) -> Column:
     """# of occurrences of a literal substring.
 
@@ -72,13 +55,6 @@ def occurrence_count(text: str | Column, needle: str) -> Column:
 
 def punct_count(text: str | Column) -> Column:
     return F.length(F.regexp_replace(col_(text), r"[^.,!?;:]", "")).cast("bigint")
-
-
-def token_count_regex(text: str | Column) -> Column:
-    """BPE-ish token count: alnum runs + isolated non-alnum-non-space chars."""
-    return F.regexp_count(col_(text), F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]")).cast(
-        "bigint"
-    )
 
 
 #: language -> marker substrings (padded with spaces: whole-word matches).

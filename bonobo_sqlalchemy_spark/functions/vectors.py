@@ -26,7 +26,7 @@ import numpy as np
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def _c(c: str | Column) -> Column:
@@ -190,73 +190,6 @@ def cosine_rounded(a: str | Column, b: str | Column, digits: int = 6) -> Column:
     return F.round(cosine(a, b), digits)
 
 
-def hyperplane_signature(a: str | Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH signature: one sign bit per plane, packed into
-    a string key. ``planes`` is a deterministic (seeded) driver-side list —
-    broadcast as literals into the plan, no state on executors."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    _c(a),
-                    F.array(*[F.lit(float(w)) for w in plane]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
-def hyperplane_signature_bits(
-    df,
-    vec_col: str,
-    id_col: str,
-    planes: list[list[float]],
-    extra_cols: tuple[str, ...] = (),
-    out_id: str = "id",
-    out_col: str = "sigbits",
-):
-    """``(out_id, *extra_cols, sigbits)`` rows where ``sigbits`` is the
-    full '0'/'1' sign-bit string of the vector against every plane.
-
-    The dot products run as ONE fused ``X @ W`` numpy matmul per Arrow
-    batch (``mapInPandas``) — see the module docstring for why this beats
-    both interpreted HOF lambdas and the explode+join+N-SUM-agg codegen
-    form. No shuffle is introduced; the map is narrow and the (dim x
-    n_planes) weight matrix ships inside the serialized closure (a few KB).
-
-    A sign can differ from a sequential-fold engine only when a dot product
-    sits within summation-reordering error (~1e-13) of zero.
-    """
-    W = np.array(planes, dtype=np.float64).T  # (dim, n_planes)
-    src = df.select(
-        F.col(id_col).alias(out_id),
-        *[F.col(c) for c in extra_cols],
-        F.col(vec_col).alias("_v"),
-    )
-    keep = [f for f in src.schema.fields if f.name != "_v"]
-    out_schema = StructType(list(keep) + [StructField(out_col, StringType())])
-
-    def _sig(batches):
-        for pdf in batches:
-            out = pdf.drop(columns=["_v"])
-            if len(pdf):
-                X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-                bits = (X @ W >= 0).astype(np.uint8) + ord("0")
-                out[out_col] = [b.tobytes().decode("ascii") for b in bits]
-            else:
-                out[out_col] = []
-            yield out
-
-    return src.mapInPandas(_sig, out_schema)
-
-
 def hyperplane_table_keys(
     df,
     vec_col: str,
@@ -271,12 +204,16 @@ def hyperplane_table_keys(
     *t*'s bucket key as a packed long (bit *j* of the table contributes
     ``1 << j``).
 
-    Same fused ``X @ W`` Arrow path as `hyperplane_signature_bits`, but the
-    per-table keys come out as longs computed in the same numpy batch — no
-    bit-string materialization and no per-row ``substring`` slicing in the
-    downstream plan. Bucket partitions are identical to the bit-string
-    form (a packed long and its bit-string are in bijection), so candidate
-    sets — and any oracle mirroring them — are unchanged.
+    The dot products run as ONE fused ``X @ W`` numpy matmul per Arrow
+    batch (``mapInArrow``) — see the module docstring for why this beats
+    both interpreted HOF lambdas and the explode+join+N-SUM-agg codegen
+    form — and the per-table keys come out as longs computed in the same
+    batch: no bit-string materialization and no per-row ``substring``
+    slicing in the downstream plan. A packed long and the table's
+    '0'/'1' sign-bit string are in bijection, so candidate sets — and any
+    oracle mirroring the bit-string form — are the same. A sign can differ
+    from a sequential-fold engine only when a dot product sits within
+    summation-reordering error (~1e-13) of zero.
     """
     from pyspark.sql.types import ArrayType, LongType
 
@@ -315,39 +252,6 @@ def hyperplane_table_keys(
             yield pa.RecordBatch.from_arrays(cols, names)
 
     return src.mapInArrow(_keys, out_schema)
-
-
-def hyperplane_buckets(
-    df,
-    vec_col: str,
-    id_col: str,
-    planes: list[list[float]],
-    bits_per_table: int,
-    extra_cols: tuple[str, ...] = (),
-    out_id: str = "id",
-):
-    """Exploded ``(out_id, *extra_cols, bucket)`` rows: one multi-table
-    hyperplane-LSH bucket key per table per vector.
-
-    Signatures come from the Arrow matmul path
-    (`hyperplane_signature_bits`); per-table bucket keys are codegen
-    ``substring`` slices of the bit-string, exploded one row per table.
-    """
-    n_tables = len(planes) // bits_per_table
-    sig = hyperplane_signature_bits(
-        df, vec_col, id_col, planes, extra_cols=extra_cols, out_id=out_id
-    )
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(t)),
-                F.substring("sigbits", t * bits_per_table + 1, bits_per_table),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    return sig.select(out_id, *extra_cols, F.explode(keys).alias("bucket"))
 
 
 def cosine_rounded_arrow(digits: int = 6):

@@ -25,11 +25,117 @@ module belongs to the driver-mandated training-data extension surface
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: damping factor 0.85 as the exact rational (17, 20)
 _DAMP_NUM, _DAMP_DEN = 17, 20
+#: the damped incoming mass of one PageRank round, as BIGINT
+_DAMPED_INC = (
+    f"CAST({_DAMP_NUM} AS BIGINT) * coalesce(inc, CAST(0 AS BIGINT)) div {_DAMP_DEN}"
+)
+
+
+def _edge_cache(e: DataFrame, broadcast: bool) -> DataFrame:
+    """The loop-invariant ``(src, dst, ...)`` edge list, materialized ONCE
+    so the k rounds re-read it instead of re-running the upstream build k
+    times (without this, every PageRank round re-joined the source tables
+    — 0 reused exchanges, ~3x the wall time on the trade graph).
+
+    Broadcast leg: pre-partitioned by dst, which makes every round's
+    ``groupBy(dst)`` partition-LOCAL — with the vertex state arriving by
+    broadcast a round moves ZERO bytes over the network (measured 38
+    MB/round -> 0 at sf1.0). ``persist`` (not localCheckpoint) keeps the
+    partitioning visible to the planner; :func:`_vertex_rounds` releases
+    it. Shuffle leg: a bare checkpoint — the per-round join shuffles on
+    src anyway, so pre-partitioning on dst would only add an exchange."""
+    return e.repartition("dst").persist() if broadcast else e.localCheckpoint()
+
+
+def _anchor(nodes: DataFrame) -> DataFrame:
+    """The per-node frame every round re-anchors on (it keeps nodes that
+    receive nothing in the output), checkpointed once. ``repartition
+    ("node")``: the per-round inbox comes out of ``groupBy(dst)``
+    hash-partitioned on the node key with the same partition count, so
+    the re-anchor left join is exchange-free on BOTH sides — no per-round
+    broadcast build job and zero shuffled bytes, measured against both
+    alternatives."""
+    return nodes.repartition("node").localCheckpoint()
+
+
+def _node_outdeg(ed: DataFrame, w_out: Column) -> DataFrame:
+    """``(node, outdeg)`` over every endpoint of the edge cache in ONE
+    exploded map-combined aggregation (r15) — it replaced [union +
+    distinct (2E-row shuffle)] + [degree agg (E-row shuffle)] + [broadcast
+    join], whose three setup stages were ~1s of the 4.8s sf0.1 bench row
+    (OPTIMIZATION_r15.md). ``w_out`` is a source's out-weight per edge.
+    SUM over an all-null group is NULL, so a node that never appears as a
+    source (a sink) carries outdeg NULL. Derived FROM the cache, so the
+    upstream edge build executes exactly once; outdeg is a per-SOURCE
+    property, so it rides the node-cardinality anchor instead of E rows
+    of the cache."""
+    nd = ed.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node"), w_out.alias("w_out")),
+                F.struct(
+                    F.col("dst").alias("node"),
+                    F.lit(None).cast("long").alias("w_out"),
+                ),
+            )
+        ).alias("x")
+    ).select("x.node", "x.w_out")
+    return nd.groupBy("node").agg(F.sum("w_out").alias("outdeg"))
+
+
+def _vertex_rounds(
+    ed: DataFrame,
+    anchor: DataFrame,
+    state: DataFrame,
+    rounds: int,
+    message: Callable[[DataFrame], DataFrame],
+    reduce: Callable[[DataFrame], DataFrame],
+    update: list,
+    checkpoint_interval: int,
+    broadcast: bool,
+) -> DataFrame:
+    """The Pregel-style round loop shared by the iterative operators
+    (the aggregateMessages shape): per round, ``message(state)`` is the
+    node-cardinality ``(src, ...)`` frame each source sends along its
+    out-edges, joined to the edge cache ``ed`` on src (by broadcast when
+    ``broadcast``); ``reduce`` folds the joined rows into a ``(node,
+    ...)`` inbox by ``groupBy(dst)``; the new state is ``update`` selected
+    from the left join of ``anchor`` with the inbox. A round builds no
+    DataFrame beyond these: Spark analyses every new DataFrame eagerly,
+    and plan building already dominates the graph loops.
+
+    ``checkpoint_interval`` bounds lazy-chain re-execution: chaining ALL
+    rounds lazily makes every round's broadcast re-execute the rounds
+    before it — quadratic re-execution that measured 3.9x the shuffle
+    volume at the sf1.0 decade (SCALING.md) — while checkpointing every
+    round costs one job per round (~80% of the sf0.1 bench row). Interval
+    k trades (k-1) extra in-memory O(E) passes per block for k-1 fewer
+    checkpoint jobs; shuffle volume is unchanged either way. INTERMEDIATE
+    checkpoints are LAZY (r15): the next round's broadcast build computes
+    every partition of the state anyway, so the checkpoint saves during
+    that job instead of paying its own. The FINAL checkpoint is eager: it
+    must materialize before the edge cache is unpersisted here (a lazy
+    final frame would re-derive the edges from source at the caller's
+    first action)."""
+    for it in range(rounds):
+        msg = message(state)
+        if broadcast:
+            msg = F.broadcast(msg)
+        inbox = reduce(ed.join(msg, "src"))
+        state = anchor.join(inbox, "node", "left").select(*update)
+        last = it == rounds - 1
+        if last or (it + 1) % max(1, checkpoint_interval) == 0:
+            state = state.localCheckpoint(eager=last)
+    if broadcast:
+        ed.unpersist(blocking=False)
+    return state
 
 
 def pagerank_integer(
@@ -86,129 +192,52 @@ def pagerank_integer(
         F.col(dst_col).cast("long").alias("dst"),
         (F.col(weight_col) if weight_col else F.lit(1)).cast("long").alias("w"),
     )
-    # the edge set is loop-invariant: materialize it ONCE so the k
-    # join+agg rounds re-read a materialized edge list instead of
-    # re-running the upstream build k times (without this, every round
-    # re-joined the source tables — 0 reused exchanges, ~3x the wall time
-    # on the trade graph). The cache is the BARE (src, dst, w) list:
-    # attaching outdeg to the edges would force the upstream subtree to
-    # execute twice (once aggregated for the degree table, once for the
-    # cache itself — measured 1.7s of the 4.5s sf0.1 bench row), and
-    # outdeg is a per-SOURCE property anyway, so it rides the
-    # node-cardinality broadcast rank side below instead of E rows here.
-    # Pre-partitioning the cache by dst makes every round's groupBy(dst)
-    # aggregation partition-LOCAL: with ranks arriving by broadcast, a
-    # round moves ZERO bytes over the network (measured 38 MB/round -> 0
-    # at sf1.0). persist (not localCheckpoint) keeps the partitioning
-    # visible to the planner; the cache is released before returning.
-    if broadcast_ranks:
-        ed = e.repartition("dst").persist()
-    else:
-        ed = e.localCheckpoint()  # (src, dst)
-    # Fused node+degree anchor (r15): ONE exploded map-combined
-    # aggregation replaces [union + distinct (2E-row shuffle)] + [degree
-    # agg (E-row shuffle)] + [broadcast join] — the r14 shape's three
-    # setup stages were ~1s of the 4.8s sf0.1 bench row (per-job
-    # breakdown in OPTIMIZATION_r15.md). SUM over an all-null group is
-    # NULL, so a node that never appears as a source (a sink) carries
-    # outdeg NULL — exactly the semantics the old left join produced;
-    # every output value is bit-identical (asserted by the unchanged
-    # reference/oracle tests).
-    nd = ed.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src").alias("node"), F.col("w").alias("w_out")),
-                F.struct(
-                    F.col("dst").alias("node"),
-                    F.lit(None).cast("long").alias("w_out"),
-                ),
-            )
-        ).alias("x")
-    ).select("x.node", "x.w_out")
-    deg_nodes = nd.groupBy("node").agg(F.sum("w_out").alias("outdeg"))
-    # The (node, outdeg) anchor frame is checkpointed ONCE and re-read
-    # every round — it keeps zero-in-degree nodes in the output, and
+    # the cache is the BARE (src, dst, w) list: attaching outdeg to the
+    # edges would force the upstream subtree to execute twice (once
+    # aggregated for the degree table, once for the cache itself —
+    # measured 1.7s of the 4.5s sf0.1 bench row)
+    ed = _edge_cache(e, broadcast_ranks)
     # carrying outdeg as an anchor COLUMN (null for sinks) means the
     # per-round contribution needs no extra node-side join (a per-round
     # ranks x deg join planned as sort-merge and measured +40% on the
-    # sf0.1 bench row).
-    # repartition("node"): the incoming aggregation below comes out of
-    # groupBy(dst) hash-partitioned on the node key with the same
-    # partition count, so the per-round re-anchor left join is exchange-
-    # free BOTH sides (co-partitioned) — no per-round broadcast build job
-    # and zero shuffled bytes, measured against both alternatives.
-    anchor = deg_nodes.repartition("node").localCheckpoint()
+    # sf0.1 bench row)
+    anchor = _anchor(_node_outdeg(ed, F.col("w")))
     # n and the per-round base term are DRIVER scalars folded in as
-    # literals (r15). The previous 1-row crossJoin broadcast cost a
-    # separate broadcast-build job that re-ran the whole exploded degree
-    # aggregation over the edge cache — exchange reuse does not span
-    # jobs, so the anchor's heaviest pass executed TWICE (0.41s + 0.43s
-    # of the sf0.1 row). The count below reads the CHECKPOINTED anchor
-    # (node-cardinality, no recompute); Python // on non-negative ints
-    # is exactly BIGINT div, so every rank is bit-identical.
+    # literals (r15): a 1-row crossJoin broadcast cost a separate build
+    # job that re-ran the exploded degree aggregation over the edge cache
+    # (exchange reuse does not span jobs). The count reads the
+    # CHECKPOINTED anchor; Python // on non-negative ints is exactly
+    # BIGINT div, so every rank is bit-identical.
     n = anchor.count()
     base_term = (3 * int(scale)) // (20 * n) if n else 0
     init_rank = int(scale) // n if n else 0
-    ranks = anchor.select(
-        "node",
-        F.lit(init_rank).cast("long").alias("rank"),
-        "outdeg",
-    )
-    for it in range(iters):
-        # ranks is node-cardinality (orders of magnitude under the edge
-        # list); pre-divide by the carried outdeg and broadcast, so each
-        # round is a map-side edge join + a partition-local aggregation
-        # and the materialized edge list never moves. For billion-node
-        # graphs pass broadcast_ranks=False to fall back to a shuffle
-        # join.
-        rside = ranks.where(F.col("outdeg").isNotNull()).select(
+    ranks = _vertex_rounds(
+        ed,
+        anchor,
+        anchor.select("node", F.lit(init_rank).cast("long").alias("rank"), "outdeg"),
+        iters,
+        # ranks pre-divided by the carried outdeg (node-cardinality, rides
+        # the broadcast); broadcast_ranks=False is the billion-node
+        # shuffle-join fallback
+        message=lambda r: r.where(F.col("outdeg").isNotNull()).select(
             F.col("node").alias("src"), F.expr("rank div outdeg").alias("q")
-        )
-        if broadcast_ranks:
-            rside = F.broadcast(rside)
+        ),
         # w * (rank div W_src): the per-source division precedes the
         # weight multiplication, which is what makes the pre-aggregated
         # form bit-identical to the exploded multigraph
-        contrib = ed.join(rside, "src").select("dst", F.expr("w * q").alias("c"))
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("inc"))
-        # co-partitioned with anchor (both HashPartitioning(node, P)):
-        # the left join plans with no exchange and no broadcast build
-        inc_side = incoming.select(F.col("dst").alias("node"), "inc")
-        ranks = anchor.join(inc_side, "node", "left").select(
+        reduce=lambda m: m.select("dst", F.expr("w * q").alias("c"))
+        .groupBy("dst")
+        .agg(F.sum("c").alias("inc"))
+        .select(F.col("dst").alias("node"), "inc"),
+        update=[
             "node",
-            (
-                F.lit(base_term).cast("long")
-                + F.expr(
-                    f"CAST({_DAMP_NUM} AS BIGINT) * coalesce(inc, CAST(0 AS BIGINT))"
-                    f" div {_DAMP_DEN}"
-                )
-            ).alias("rank"),
+            (F.lit(base_term).cast("long") + F.expr(_DAMPED_INC)).alias("rank"),
             "outdeg",
-        )
-        # materialize the (tiny) rank table every checkpoint_interval
-        # rounds: chaining ALL k rounds lazily means every round's
-        # broadcast re-executes the rounds before it — quadratic
-        # re-execution that measured 3.9x the shuffle volume at the sf1.0
-        # decade (SCALING.md). Checkpointing every round makes per-round
-        # work O(E) exactly once but costs one job per round, which is
-        # ~80% of the sf0.1 bench row; the interval bounds re-execution
-        # at (interval-1) extra O(E) passes per block instead.
-        # INTERMEDIATE checkpoints are LAZY (r15): the next round's
-        # broadcast build computes every partition of the rank frame
-        # anyway, so the checkpoint saves during that job instead of
-        # paying its own materialization job — same re-execution bound,
-        # one job fewer per checkpoint. The FINAL checkpoint stays eager:
-        # it must materialize before the edge cache is unpersisted below
-        # (a lazy final frame would re-derive the edges from source at
-        # the caller's first action).
-        if (it + 1) % max(1, checkpoint_interval) == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=(it == iters - 1))
-    out = ranks.select("node", "rank")
-    if broadcast_ranks:
-        # the final ranks are checkpoint-materialized; the edge cache is
-        # no longer referenced
-        ed.unpersist(blocking=False)
-    return out
+        ],
+        checkpoint_interval=checkpoint_interval,
+        broadcast=broadcast_ranks,
+    )
+    return ranks.select("node", "rank")
 
 
 def pagerank_personalized_integer(
@@ -240,84 +269,48 @@ def pagerank_personalized_integer(
     e = edges.select(
         F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
     )
-    # bare dst-partitioned edge cache + degree table derived FROM the
-    # cache, for the same reasons as pagerank_integer: the upstream edge
-    # build executes exactly once, the edge list never shuffles after its
-    # build, and every round's aggregation is partition-local
-    if broadcast_ranks:
-        ed = e.repartition("dst").persist()
-    else:
-        ed = e.localCheckpoint()
-    # Fused node+degree frame (r15, same construction and rationale as
-    # pagerank_integer's anchor): one exploded map-combined aggregation
-    # instead of union+distinct+degree-agg+join; SUM over all-null = NULL
-    # marks sinks exactly as the old left join did.
-    nd = ed.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("src").alias("node"), F.lit(1).cast("long").alias("w_out")
-                ),
-                F.struct(
-                    F.col("dst").alias("node"),
-                    F.lit(None).cast("long").alias("w_out"),
-                ),
-            )
-        ).alias("x")
-    ).select("x.node", "x.w_out")
-    deg_nodes = nd.groupBy("node").agg(F.sum("w_out").alias("outdeg"))
+    ed = _edge_cache(e, broadcast_ranks)
+    deg_nodes = _node_outdeg(ed, F.lit(1).cast("long"))
     sd = seeds.select(F.col(seed_col).cast("long").alias("node")).distinct()
-    # the marked node frame carries outdeg (null for sinks), for the same
-    # reason as pagerank_integer's anchor: the per-round restart term and
-    # contribution divide node-side with no extra join.
-    # repartition("node") co-partitions it with the per-round incoming
-    # aggregation: the re-anchor join plans exchange-free.
-    marked = (
+    marked = _anchor(
         deg_nodes.join(
             F.broadcast(sd.withColumn("is_seed", F.lit(True))), "node", "left"
-        )
-        .select(
+        ).select(
             "node",
             F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
             "outdeg",
         )
-        .repartition("node")
-        .localCheckpoint()
     )
-    # |S| as a DRIVER scalar folded in as literals (r15, mirrors
-    # pagerank_integer): the 1-row crossJoin broadcast cost a separate
-    # build job. NOTE the count is over sd, NOT over marked's seed rows —
-    # a seed absent from the graph still belongs in the restart
-    # denominator (the textbook contract, unchanged). Python // ==
-    # BIGINT div on non-negative ints, so ranks are bit-identical.
+    # |S| as a DRIVER scalar folded in as literals, as in pagerank_integer.
+    # NOTE the count is over sd, NOT over marked's seed rows — a seed
+    # absent from the graph still belongs in the restart denominator (the
+    # textbook contract).
     ns = sd.count()
     seed_base = (3 * int(scale)) // (20 * ns) if ns else 0
     seed_init = int(scale) // ns if ns else 0
-    ranks = marked.select(
-        "node",
-        "is_seed",
-        F.expr(
-            f"CASE WHEN is_seed THEN CAST({seed_init} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-        ).alias("rank"),
-        "outdeg",
-    )
-    for it in range(iters):
-        rside = ranks.where(F.col("outdeg").isNotNull()).select(
+    ranks = _vertex_rounds(
+        ed,
+        marked,
+        marked.select(
+            "node",
+            "is_seed",
+            F.expr(
+                f"CASE WHEN is_seed THEN CAST({seed_init} AS BIGINT) "
+                "ELSE CAST(0 AS BIGINT) END"
+            ).alias("rank"),
+            "outdeg",
+        ),
+        iters,
+        message=lambda r: r.where(F.col("outdeg").isNotNull()).select(
             F.col("node").alias("src"), F.expr("rank div outdeg").alias("c")
-        )
-        if broadcast_ranks:
-            rside = F.broadcast(rside)
-        contrib = ed.join(rside, "src").select("dst", "c")
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("inc"))
-        # co-partitioned with marked on the node key: exchange-free join
-        inc_side = incoming.select(F.col("dst").alias("node"), "inc")
-        # a node with no in-edges this round simply drops out of `incoming`;
-        # re-anchor on the marked node frame so seeds always restart. The
-        # checkpoint cadence (same rationale + trade as pagerank_integer)
-        # bounds lazy-chain re-execution at (interval-1) extra O(E) passes
-        # per block.
-        ranks = marked.join(inc_side, "node", "left").select(
+        ),
+        reduce=lambda m: m.select("dst", "c")
+        .groupBy("dst")
+        .agg(F.sum("c").alias("inc"))
+        .select(F.col("dst").alias("node"), "inc"),
+        # re-anchoring on the marked node frame lets seeds restart even
+        # with zero inflow
+        update=[
             "node",
             "is_seed",
             (
@@ -325,19 +318,14 @@ def pagerank_personalized_integer(
                     f"CASE WHEN is_seed THEN CAST({seed_base} AS BIGINT) "
                     "ELSE CAST(0 AS BIGINT) END"
                 )
-                + F.expr(
-                    f"CAST({_DAMP_NUM} AS BIGINT) * coalesce(inc, CAST(0 AS BIGINT)) div {_DAMP_DEN}"
-                )
+                + F.expr(_DAMPED_INC)
             ).alias("rank"),
             "outdeg",
-        )
-        # lazy intermediate / eager final, as in pagerank_integer (r15)
-        if (it + 1) % max(1, checkpoint_interval) == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=(it == iters - 1))
-    out = ranks.select("node", "rank")
-    if broadcast_ranks:
-        ed.unpersist(blocking=False)
-    return out
+        ],
+        checkpoint_interval=checkpoint_interval,
+        broadcast=broadcast_ranks,
+    )
+    return ranks.select("node", "rank")
 
 
 def pagerank_personalized_integer_sql(
@@ -421,6 +409,33 @@ def pagerank_integer_sql(
     return "WITH" + ",".join([base] + steps) + f"\n    SELECT node, rank FROM r{iters}"
 
 
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The undirected simple graph induced by ``edges`` as canonical
+    ``(u, v)`` pairs with ``u < v`` (either/both directions accepted,
+    self-loops dropped, parallel edges collapsed), materialized once: its
+    readers (a degree aggregate plus joins or per-round filters) would
+    otherwise each re-execute the upstream pair generator, often an LSH
+    pipeline."""
+    e = edges.select(
+        F.col(src_col).cast("long").alias("x"), F.col(dst_col).cast("long").alias("y")
+    ).where(F.col("x") != F.col("y"))
+    return (
+        e.select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(node, d)``: the undirected degree of every endpoint of ``und``."""
+    return (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
 def triangle_counts(
     edges: DataFrame,
     src_col: str = "src",
@@ -461,22 +476,8 @@ def triangle_counts(
     mis-order would corrupt Spark and the DuckDB twin identically, so
     oracle parity could never catch it).
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("x"), F.col(dst_col).cast("long").alias("y")
-    ).where(F.col("x") != F.col("y"))
-    und = e.select(
-        F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
-    ).distinct()
-    # materialized once: the degree aggregate and both orientation joins
-    # read it; without this the upstream pair generator (often an LSH
-    # pipeline) would execute three times.
-    und = und.localCheckpoint()
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionAll(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und = _undirected(edges, src_col, dst_col)
+    deg = _degrees(und)
     # The packing is only an order-embedding of (d, node) while ids sit in
     # [0, 2^32); outside it the orientation silently corrupts AND the DuckDB
     # twin corrupts identically (shared packing), so oracle parity cannot
@@ -631,22 +632,10 @@ def kcore_peel(
     aggregate that the round computes anyway). ``stats`` (optional
     dict) records ``rounds_run`` for tests/audits.
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("x"), F.col(dst_col).cast("long").alias("y")
-    ).where(F.col("x") != F.col("y"))
-    cur = (
-        e.select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    cur = _undirected(edges, src_col, dst_col)
     rounds_run = 0
     for _ in range(rounds):
-        dg = (
-            cur.select(F.col("u").alias("node"))
-            .unionAll(cur.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+        dg = _degrees(cur)
         # fixpoint probe: one tiny 2-scalar agg over the node-cardinality
         # degree frame (computed this round regardless). All nodes already
         # >= k -> nothing peels now or ever after; stop.
@@ -670,13 +659,7 @@ def kcore_peel(
         )
     if stats is not None:
         stats["rounds_run"] = rounds_run
-    final_deg = (
-        cur.select(F.col("u").alias("node"))
-        .unionAll(cur.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg_final"))
-    )
-    return final_deg
+    return _degrees(cur).select("node", F.col("d").cast("bigint").alias("deg_final"))
 
 
 def kcore_peel_sql(edges_sql: str, k: int = 3, rounds: int = 4) -> str:
@@ -758,17 +741,11 @@ def label_propagation(
     e = edges.select(
         F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
     )
-    # broadcast leg: dst-partitioned cache makes the per-round modal count
-    # partition-local (rounds move ~0 bytes). Fallback leg: bare checkpoint
-    # — the per-round join shuffles on src anyway, so pre-partitioning on
-    # dst would only add an extra exchange (mirrors pagerank_integer).
-    ed = e.repartition("dst").persist() if broadcast_labels else e.localCheckpoint()
+    ed = _edge_cache(e, broadcast_labels)
     # node set in ONE pass over the edge cache (explode both endpoints,
     # map-side-partial distinct) instead of a two-leg union — r15, same
-    # rationale as the fused pagerank anchor
-    nodes = (
-        ed.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
-    )
+    # rationale as _node_outdeg
+    nodes = ed.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
     # one label per seed node, deterministically (min) — callers passing a
     # conflicting seed frame get the smallest label, not a race
     sd = (
@@ -779,41 +756,28 @@ def label_propagation(
         .groupBy("node")
         .agg(F.min("seed_lbl").alias("seed_lbl"))
     )
-    anchor = (
-        nodes.join(F.broadcast(sd), "node", "left")
-        .repartition("node")
-        .localCheckpoint()
-    )
-    labels = anchor.select("node", F.col("seed_lbl").alias("lbl"))
-    for it in range(rounds):
-        lsrc = labels.where(F.col("lbl").isNotNull()).select(
+    anchor = _anchor(nodes.join(F.broadcast(sd), "node", "left"))
+    labels = _vertex_rounds(
+        ed,
+        anchor,
+        anchor.select("node", F.col("seed_lbl").alias("lbl")),
+        rounds,
+        message=lambda s: s.where(F.col("lbl").isNotNull()).select(
             F.col("node").alias("src"), "lbl"
-        )
-        if broadcast_labels:
-            lsrc = F.broadcast(lsrc)
-        cnt = (
-            ed.join(lsrc, "src")
-            .groupBy("dst", "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
+        ),
         # modal pick as max(struct(c, -lbl)) — highest count, ties to the
         # SMALLEST label — instead of a rank-window: stays in hash-agg
         # land (partial max map-side), one sort fewer per round
-        pick = (
-            cnt.groupBy("dst")
-            .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
-            .select(F.col("dst").alias("node"), (-F.col("m.nl")).alias("prop_lbl"))
-        )
-        labels = anchor.join(pick, "node", "left").select(
-            "node", F.coalesce("seed_lbl", "prop_lbl").alias("lbl")
-        )
-        # lazy intermediate / eager final, as in pagerank_integer (r15)
-        if (it + 1) % max(1, checkpoint_interval) == 0 or it == rounds - 1:
-            labels = labels.localCheckpoint(eager=(it == rounds - 1))
-    out = labels.select("node", F.col("lbl").alias("label"))
-    if broadcast_labels:
-        ed.unpersist(blocking=False)
-    return out
+        reduce=lambda m: m.groupBy("dst", "lbl")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("dst")
+        .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
+        .select(F.col("dst").alias("node"), (-F.col("m.nl")).alias("prop_lbl")),
+        update=["node", F.coalesce("seed_lbl", "prop_lbl").alias("lbl")],
+        checkpoint_interval=checkpoint_interval,
+        broadcast=broadcast_labels,
+    )
+    return labels.select("node", F.col("lbl").alias("label"))
 
 
 def label_propagation_sql(

@@ -44,6 +44,7 @@ Backends:
 
 from __future__ import annotations
 
+import decimal
 import os
 import shutil
 from typing import Any, Iterable
@@ -328,6 +329,12 @@ class InsertOrUpdate:
 
                     if iso_ts and isinstance(v, _dt.datetime):
                         return v.isoformat(sep=" ")
+                    if iso_ts and isinstance(v, decimal.Decimal):
+                        # sqlite3 has no Decimal adapter either. A NUMERIC
+                        # column stores INTEGER or REAL anyway, and a key
+                        # bound as int/float equals what the find query
+                        # returns (int keeps decimal(20,0) keys exact).
+                        return int(v) if v == v.to_integral_value() else float(v)
                     return v
 
                 for row in pdf.itertuples(index=False, name=None):

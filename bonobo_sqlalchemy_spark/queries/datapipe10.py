@@ -708,6 +708,61 @@ def _pagerank_oracle() -> str:
     """
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetrized customer<->supplier trade graph as directed (src,
+    dst): customer c is node 2c, supplier s is node 2s+1, one edge each
+    way per distinct (customer, supplier) that traded."""
+    from ..partitioning import rebalance_narrow_input
+
+    # The edge build (broadcast join + partial distinct) otherwise runs
+    # inside the row-group-bounded lineitem scan tasks (3 at sf0.1) — fan
+    # the narrow scan out first; a no-op exchange-free pass-through at
+    # scale (r15, same pattern as the shingle tokenizers).
+    li = rebalance_narrow_input(
+        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"),
+        "l_orderkey",
+    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    pairs = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .distinct()
+    )
+    # symmetrize with ONE map pass (explode of a 2-struct array) — a union
+    # of two selects would re-run the join+distinct subtree per leg
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    (2 * F.col("c")).alias("src"), (2 * F.col("s") + 1).alias("dst")
+                ),
+                F.struct(
+                    (2 * F.col("s") + 1).alias("src"), (2 * F.col("c")).alias("dst")
+                ),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+def _similarity_edges(emb: DataFrame) -> DataFrame:
+    """The embedding similarity graph as directed (src, dst): the
+    auto-bits LSH near-dup pairs at threshold 0.15, cross-label,
+    symmetrized in one map pass."""
+    from ..operators import dedup as D
+
+    pairs = D.embedding_near_dup_pairs(emb, threshold=0.15, block_col=None).select(
+        "id1", "id2"
+    )
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+                F.struct(F.col("id2").alias("src"), F.col("id1").alias("dst")),
+            )
+        ).alias("ed")
+    ).select("ed.src", "ed.dst")
+
+
 @query(
     "z_graph_pagerank",
     oracle=_pagerank_oracle(),
@@ -727,37 +782,8 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation order are irrelevant and the DuckDB unrolled CTE chain
     reproduces each of the 6 rounds bit-for-bit."""
     from ..operators.graphalgo import pagerank_integer
-    from ..partitioning import rebalance_narrow_input
 
-    # The edge build (broadcast join + partial distinct) otherwise runs
-    # inside the row-group-bounded lineitem scan tasks (3 at sf0.1) — fan
-    # the narrow scan out first; a no-op exchange-free pass-through at
-    # scale (r15, same pattern as the shingle tokenizers).
-    li = rebalance_narrow_input(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"),
-        "l_orderkey",
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    # symmetrize with ONE map pass (explode of a 2-struct array) — a union
-    # of two selects would re-run the join+distinct subtree per leg
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    (2 * F.col("c")).alias("src"), (2 * F.col("s") + 1).alias("dst")
-                ),
-                F.struct(
-                    (2 * F.col("s") + 1).alias("src"), (2 * F.col("c")).alias("dst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    ranks = pagerank_integer(edges, iters=6)
+    ranks = pagerank_integer(_trade_edges(spark, sf_dir), iters=6)
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     joined = ranks.join(sup, ranks.node == 2 * sup.s_suppkey + 1).select(
         "s_name", F.col("rank").alias("rank_micro")
@@ -979,36 +1005,12 @@ def z_graph_ppr_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     even with zero inflow); VALUE-EXACT via the unrolled personalized CTE
     chain."""
     from ..operators.graphalgo import pagerank_personalized_integer
-    from ..partitioning import rebalance_narrow_input
 
-    # Same narrow-scan fan-out as z_graph_pagerank (no-op at scale).
-    li = rebalance_narrow_input(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"),
-        "l_orderkey",
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    (2 * F.col("c")).alias("src"), (2 * F.col("s") + 1).alias("dst")
-                ),
-                F.struct(
-                    (2 * F.col("s") + 1).alias("src"), (2 * F.col("c")).alias("dst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     seeds = cust.where(F.col("c_nationkey") == 7).select(
         (2 * F.col("c_custkey")).alias("node")
     )
-    ranks = pagerank_personalized_integer(edges, seeds, iters=6)
+    ranks = pagerank_personalized_integer(_trade_edges(spark, sf_dir), seeds, iters=6)
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     joined = ranks.join(sup, ranks.node == 2 * sup.s_suppkey + 1).select(
         "s_name", F.col("rank").alias("rank_micro")
@@ -1074,23 +1076,11 @@ def z_graph_ppr_seed_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     every scale factor. The walk costs one broadcast join + one
     partition-local aggregation per round. (Every invocation computes
     the edges from the parquet input — no cross-run artifact.)"""
-    from ..operators import dedup as D
     from ..operators.graphalgo import pagerank_personalized_integer
 
     e = load_table(spark, sf_dir, "embeddings")
-    pairs = D.embedding_near_dup_pairs(
-        e, threshold=0.15, block_col=None
-    ).select("id1", "id2")
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id1").alias("src"), F.col("id2").alias("dst")),
-                F.struct(F.col("id2").alias("src"), F.col("id1").alias("dst")),
-            )
-        ).alias("ed")
-    ).select("ed.src", "ed.dst")
     seeds = e.where(F.col("label") == 3).select(F.col("vec_id").alias("node"))
-    ranks = pagerank_personalized_integer(edges, seeds, iters=6)
+    ranks = pagerank_personalized_integer(_similarity_edges(e), seeds, iters=6)
     labeled = ranks.join(e.select("vec_id", "label"), ranks.node == F.col("vec_id"))
     cand = labeled.where((F.col("label") != 3) & (F.col("rank") > 0)).select(
         "vec_id", "label", F.col("rank").alias("rank_micro")

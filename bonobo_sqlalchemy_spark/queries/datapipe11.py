@@ -221,25 +221,14 @@ def z_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     over per-(node, label) counts, bounded by labels-per-node. (Every
     invocation computes the similarity edges from the parquet input —
     no cross-run artifact.)"""
-    from ..operators import dedup as D
     from ..operators.graphalgo import label_propagation
+    from .datapipe10 import _similarity_edges
 
     e = load_table(spark, sf_dir, "embeddings")
-    pairs = D.embedding_near_dup_pairs(e, threshold=0.15, block_col=None).select(
-        "id1", "id2"
-    )
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id1").alias("src"), F.col("id2").alias("dst")),
-                F.struct(F.col("id2").alias("src"), F.col("id1").alias("dst")),
-            )
-        ).alias("ed")
-    ).select("ed.src", "ed.dst")
     seeds = e.where(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("node"), "label"
     )
-    lp = label_propagation(edges, seeds, rounds=4)
+    lp = label_propagation(_similarity_edges(e), seeds, rounds=4)
     out = (
         lp.where(F.col("label").isNotNull())
         .join(

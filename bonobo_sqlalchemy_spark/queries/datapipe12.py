@@ -62,48 +62,6 @@ def neardup_edge_index_cached(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def embedding_edge_index_cached(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once embedding similarity-graph edges (hyperplane-LSH
-    auto-bits, exact-cosine verified, threshold 0.15, cross-label — the
-    `z_graph_labelprop` / `z_graph_ppr_seed_expand` parameterization)
-    under `cache.ensure_artifact`. The stored pairs are the deterministic
-    seeded-plane + rounded-cosine set, so queries reading the artifact
-    keep their VALUE-EXACT oracles unchanged — a cached edge list is
-    indistinguishable from an inline build."""
-    from ..operators import dedup as D
-
-    src = f"{sf_dir}/embeddings.parquet"
-    st = os.stat(src)
-
-    def _build(tmp: str) -> None:
-        e = load_table(spark, sf_dir, "embeddings")
-        D.embedding_near_dup_pairs(e, threshold=0.15, block_col=None).select(
-            "id1", "id2"
-        ).write.parquet(f"{tmp}/edges")
-
-    return ensure_artifact(
-        artifact_path("embedges", f"{src}:{st.st_size}:{st.st_mtime_ns}:t015auto"),
-        _build,
-    )
-
-
-def symmetrized_cached_embedding_edges(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The cached embedding edge list symmetrized into directed (src, dst)
-    — the form the propagation/walk operators consume."""
-    path = embedding_edge_index_cached(spark, sf_dir)
-    pairs = spark.read.parquet(f"{path}/edges")
-    return pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id1").alias("src"), F.col("id2").alias("dst")),
-                F.struct(F.col("id2").alias("src"), F.col("id1").alias("dst")),
-            )
-        ).alias("ed")
-    ).select("ed.src", "ed.dst")
-
-
 def _audit_saved_oracle() -> str:
     from ..operators.graphalgo import kcore_peel_sql, triangle_counts_sql
 

@@ -105,7 +105,8 @@ def main() -> None:
         "",
         f"Generated {datetime.date.today().isoformat()} at commit `{commit}` "
         f"(engine source sha256 `{src_hash}`); steady-state (min-of-2) "
-        f"seconds per scale factor on local[32]. Box load1 at start "
+        f"seconds per scale factor on local[{spark.sparkContext.defaultParallelism}]. "
+        f"Box load1 at start "
         f"{load1_start}, at end {load1_end} (bench.py's trust-signal "
         "convention: high/shifting load means deltas vs a prior round are "
         "noise, not code).",

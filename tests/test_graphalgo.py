@@ -70,24 +70,53 @@ def test_pagerank_dangling_node_keeps_rank_but_leaks_mass(spark):
 
 def test_pagerank_checkpoint_interval_value_invariant(spark):
     """The checkpoint cadence is an execution knob, not a semantic one:
-    interval 1 / 2 / iters produce bit-identical ranks."""
+    interval 1 / 2 / iters produce bit-identical ranks, for the uniform
+    and the personalized operator."""
+    from bonobo_sqlalchemy_spark.operators.graphalgo import (
+        pagerank_personalized_integer,
+    )
+
     edges = [(1, 2), (2, 1), (3, 1), (1, 3), (4, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    outs = [
-        {r.node: r.rank for r in pagerank_integer(df, iters=5, checkpoint_interval=k).collect()}
-        for k in (1, 2, 5)
-    ]
-    assert outs[0] == outs[1] == outs[2] == _reference(edges, iters=5)
+    sd = spark.createDataFrame([(1,), (4,)], "node long")
+    for run, ref in (
+        (
+            lambda k: pagerank_integer(df, iters=5, checkpoint_interval=k),
+            _reference(edges, iters=5),
+        ),
+        (
+            lambda k: pagerank_personalized_integer(
+                df, sd, iters=5, checkpoint_interval=k
+            ),
+            _reference_ppr(edges, [1, 4], iters=5),
+        ),
+    ):
+        outs = [{r.node: r.rank for r in run(k).collect()} for k in (1, 2, 5)]
+        assert outs[0] == outs[1] == outs[2] == ref
 
 
 def test_pagerank_shuffle_join_leg_matches_broadcast_leg(spark):
     """broadcast_ranks=False (the billion-node fallback) runs the same
-    recurrence through shuffle joins — values must be bit-identical."""
+    recurrence through shuffle joins — values must be bit-identical, for
+    the uniform and the personalized operator."""
+    from bonobo_sqlalchemy_spark.operators.graphalgo import (
+        pagerank_personalized_integer,
+    )
+
     edges = _sym([(i, (i * 3) % 17) for i in range(17)]) + [(20, 1)]
     df = spark.createDataFrame(edges, "src long, dst long")
     a = {r.node: r.rank for r in pagerank_integer(df, iters=4).collect()}
     b = {r.node: r.rank for r in pagerank_integer(df, iters=4, broadcast_ranks=False).collect()}
     assert a == b == _reference(edges, iters=4)
+    sd = spark.createDataFrame([(0,), (5,)], "node long")
+    c = {r.node: r.rank for r in pagerank_personalized_integer(df, sd, iters=4).collect()}
+    d = {
+        r.node: r.rank
+        for r in pagerank_personalized_integer(
+            df, sd, iters=4, broadcast_ranks=False
+        ).collect()
+    }
+    assert c == d == _reference_ppr(edges, [0, 5], iters=4)
 
 
 def test_pagerank_weighted_equals_exploded_multigraph(spark):
@@ -604,3 +633,46 @@ def test_triangles_rejects_out_of_range_node_ids(spark):
     with pytest.raises(Exception) as ei2:
         triangle_counts(neg).collect()
     assert "packing" in str(ei2.value)
+
+
+def test_loop_operators_pin_spark_job_counts(spark):
+    """The exact number of Spark jobs each round-loop operator submits
+    before it returns (set-up checkpoints and scalar counts, one broadcast
+    build per round, lazy intermediate and eager final checkpoints), on a
+    tiny graph with the broadcast legs and the default cadence. Job counts
+    do not depend on timing, so a change to the shared round loop that
+    adds or drops work fails here without benchmark noise. (The shuffle
+    legs are left out: adaptive execution plans their joins from runtime
+    sizes, and their job count varies from run to run.)"""
+    from bonobo_sqlalchemy_spark.operators.graphalgo import (
+        pagerank_personalized_integer,
+    )
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        _sym([(1, 2), (2, 3), (3, 4), (4, 5), (5, 1), (2, 5)]) + [(6, 2)],
+        "src long, dst long",
+    )
+    sd = spark.createDataFrame([(1,), (4,)], "node long")
+    lbl = spark.createDataFrame([(1, 10), (4, 20)], "node long, label long")
+    calls = {
+        "pagerank_integer": lambda: pagerank_integer(df, iters=5),
+        "pagerank_personalized_integer": lambda: pagerank_personalized_integer(
+            df, sd, iters=5
+        ),
+        "label_propagation": lambda: label_propagation(df, lbl, rounds=4),
+    }
+    jobs = {}
+    try:
+        for name, call in calls.items():
+            group = f"test-graph-jobs-{name}"
+            sc.setJobGroup(group, name)
+            call()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == {
+        "pagerank_integer": 17,
+        "pagerank_personalized_integer": 20,
+        "label_propagation": 15,
+    }

@@ -80,9 +80,6 @@ NO_CARTESIAN_EXEMPT = {
     # 1-row total-token-count aggregate broadcast into the token stream
     # (the unigram probability denominator) — constant build side
     "z_text_unigram_logprob",
-    # 1-row node-count aggregate broadcast into the initial rank frame
-    # (PageRank's 1/n and damping-base terms) — constant build side
-    "z_graph_pagerank",
     # 1-row average-balance aggregate broadcast-crossed into the customer
     # filter (TPC-H Q22's scalar subquery) — not a data join
     "q22_dormant_customers",

@@ -161,6 +161,33 @@ def test_audit_timestamps_and_insert_only_fields(spark, db):
     assert updated2 >= updated1
 
 
+def test_sqlite_decimal_column_round_trip(spark, db):
+    """DECIMAL(18,2), the engine's money type, reaches SQLite (whose
+    sqlite3 module has no Decimal adapter) on insert and on update, with no
+    dead letters — also through a decimal(20,0) key, the type DuckDB's
+    JDBC driver gives BIGINT columns."""
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE money (id INTEGER PRIMARY KEY, amount NUMERIC)")
+    con.commit()
+    con.close()
+
+    def batch(cents_per_id):
+        return spark.range(6).select(
+            F.col("id").cast("decimal(20,0)").alias("id"),
+            (F.col("id") * cents_per_id / 100).cast("decimal(18,2)").alias("amount"),
+        )
+
+    sink = InsertOrUpdate("money", discriminant=("id",))
+    run(Graph(batch(125), sink), spark, services=_svc(db))
+    assert sink.last_stats == {"insert": 6, "update": 0}
+    assert sink.last_errors == []
+    run(Graph(batch(250), sink), spark, services=_svc(db))
+    assert sink.last_stats == {"insert": 0, "update": 6}
+    assert sink.last_errors == []
+    rows = _read(db, "SELECT id, CAST(amount * 100 AS INTEGER) FROM money ORDER BY id")
+    assert rows == [(i, i * 250) for i in range(6)]
+
+
 def test_fetch_columns_generated_id(spark, db):
     """O2i: DB-generated id fetched back into the outgoing stream."""
     rows = spark.createDataFrame(
