@@ -37,9 +37,11 @@ Backends:
   partition-parallel. At cluster scale this is the JDBC-executor pattern;
   connection failure raises ``UnrecoverableOperationalError`` (fatal, O2a).
 - :class:`~..registry.PathService` — parquet-directory "table": MERGE
-  emulation by key-split + rewrite. On a real lakehouse target this is
-  ``MERGE INTO`` (Delta/Iceberg); the parquet emulation keeps the exact
-  same observable semantics for tests and local pipelines.
+  emulation by one keyed full-outer join of the target with the incoming
+  rows and one rewrite, published in place or as a snapshot commit. On a
+  real lakehouse target this is ``MERGE INTO`` (Delta/Iceberg); the
+  parquet emulation keeps the exact same observable semantics for tests
+  and local pipelines.
 """
 
 from __future__ import annotations
@@ -49,13 +51,12 @@ import os
 import shutil
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..constants import INSERT, UPDATE, Operation
+from ..constants import INSERT, UPDATE
 from ..errors import (
     FetchBackError,
-    ProhibitedOperationError,
     UnrecoverableOperationalError,
 )
 from ..registry import (
@@ -340,94 +341,96 @@ class InsertOrUpdate:
                 for row in pdf.itertuples(index=False, name=None):
                     yield tuple(conv(v) for v in row)
 
-            cur = conn.cursor()
-            for pdf in batches:
-                all_rows = list(rows_of(pdf))
-                for chunk in _chunked(all_rows, params["buffer_size"]):
-                    # O2e batched find: which keys already exist?
-                    chunk_keys = [tuple(r[i] for i in key_idx) for r in chunk]
-                    existing: set[tuple] = set()
-                    for kchunk in _chunked(chunk_keys, 500):
-                        if len(keys) == 1:
-                            phs = ", ".join([ph] * len(kchunk))
-                            find_sql = (
-                                f"SELECT {_quote(keys[0])} FROM {q_table} "
-                                f"WHERE {_quote(keys[0])} IN ({phs})"
-                            )
-                            cur.execute(find_sql, [k[0] for k in kchunk])
-                        else:
-                            cond = " OR ".join(
-                                ["(" + " AND ".join(f"{_quote(k)} = {ph}" for k in keys) + ")"]
-                                * len(kchunk)
-                            )
-                            find_sql = f"SELECT {', '.join(_quote(k) for k in keys)} FROM {q_table} WHERE {cond}"
-                            cur.execute(find_sql, [v for k in kchunk for v in k])
-                        existing.update(tuple(r) for r in cur.fetchall())
-
-                    ins_rows, upd_rows = [], []
-                    for r, k in zip(chunk, chunk_keys):
-                        if k in existing:
-                            if not params["allow_update"]:  # O2h
-                                errors["UPDATE:" + repr(k)] = (
-                                    errors.get("UPDATE:" + repr(k), 0) + 1
+            try:
+                cur = conn.cursor()
+                for pdf in batches:
+                    all_rows = list(rows_of(pdf))
+                    for chunk in _chunked(all_rows, params["buffer_size"]):
+                        # O2e batched find: which keys already exist?
+                        chunk_keys = [tuple(r[i] for i in key_idx) for r in chunk]
+                        existing: set[tuple] = set()
+                        for kchunk in _chunked(chunk_keys, 500):
+                            if len(keys) == 1:
+                                phs = ", ".join([ph] * len(kchunk))
+                                find_sql = (
+                                    f"SELECT {_quote(keys[0])} FROM {q_table} "
+                                    f"WHERE {_quote(keys[0])} IN ({phs})"
                                 )
-                                continue
-                            if update_sql is None:
-                                # Every non-key column is insert-only: there
-                                # is nothing to SET. The reference's UPDATE
-                                # would fail per-row and be channelled
-                                # downstream (writers.py:92-95) — surface a
-                                # dead-letter record instead of silence.
-                                ek = "UPDATE-noop:" + repr(k)
-                                errors[ek] = errors.get(ek, 0) + 1
-                                continue
-                            upd_rows.append(
-                                tuple(r[cols.index(c)] for c in upd_cols)
-                                + tuple(r[i] for i in key_idx)
-                            )
-                        else:
-                            if not params["allow_insert"]:
-                                errors["INSERT:" + repr(k)] = (
-                                    errors.get("INSERT:" + repr(k), 0) + 1
-                                )
-                                continue
-                            ins_rows.append(r)
-
-                    # O2c: one transaction per chunk; O2d: per-row fallback.
-                    try:
-                        if ins_rows:
-                            if copy_rows is not None:
-                                copy_rows(q_table, [_quote(c) for c in cols], ins_rows)
+                                cur.execute(find_sql, [k[0] for k in kchunk])
                             else:
-                                cur.executemany(insert_sql, ins_rows)
-                        if upd_rows and update_sql:
-                            cur.executemany(update_sql, upd_rows)
-                        conn.commit()
-                        n_ins += len(ins_rows)
-                        n_upd += len(upd_rows) if update_sql else 0
-                    except Exception:
-                        conn.rollback()
-                        for r in ins_rows:
-                            try:
-                                cur.execute(insert_sql, r)
-                                conn.commit()
-                                n_ins += 1
-                            except Exception as ex:
-                                conn.rollback()
-                                errors[f"INSERT-row:{type(ex).__name__}:{ex}"] = (
-                                    errors.get(f"INSERT-row:{type(ex).__name__}:{ex}", 0) + 1
+                                cond = " OR ".join(
+                                    ["(" + " AND ".join(f"{_quote(k)} = {ph}" for k in keys) + ")"]
+                                    * len(kchunk)
                                 )
-                        for r in upd_rows:
-                            try:
-                                cur.execute(update_sql, r)
-                                conn.commit()
-                                n_upd += 1
-                            except Exception as ex:
-                                conn.rollback()
-                                errors[f"UPDATE-row:{type(ex).__name__}:{ex}"] = (
-                                    errors.get(f"UPDATE-row:{type(ex).__name__}:{ex}", 0) + 1
+                                find_sql = f"SELECT {', '.join(_quote(k) for k in keys)} FROM {q_table} WHERE {cond}"
+                                cur.execute(find_sql, [v for k in kchunk for v in k])
+                            existing.update(tuple(r) for r in cur.fetchall())
+
+                        ins_rows, upd_rows = [], []
+                        for r, k in zip(chunk, chunk_keys):
+                            if k in existing:
+                                if not params["allow_update"]:  # O2h
+                                    errors["UPDATE:" + repr(k)] = (
+                                        errors.get("UPDATE:" + repr(k), 0) + 1
+                                    )
+                                    continue
+                                if update_sql is None:
+                                    # Every non-key column is insert-only: there
+                                    # is nothing to SET. The reference's UPDATE
+                                    # would fail per-row and be channelled
+                                    # downstream (writers.py:92-95) — surface a
+                                    # dead-letter record instead of silence.
+                                    ek = "UPDATE-noop:" + repr(k)
+                                    errors[ek] = errors.get(ek, 0) + 1
+                                    continue
+                                upd_rows.append(
+                                    tuple(r[cols.index(c)] for c in upd_cols)
+                                    + tuple(r[i] for i in key_idx)
                                 )
-            conn.close()
+                            else:
+                                if not params["allow_insert"]:
+                                    errors["INSERT:" + repr(k)] = (
+                                        errors.get("INSERT:" + repr(k), 0) + 1
+                                    )
+                                    continue
+                                ins_rows.append(r)
+
+                        # O2c: one transaction per chunk; O2d: per-row fallback.
+                        try:
+                            if ins_rows:
+                                if copy_rows is not None:
+                                    copy_rows(q_table, [_quote(c) for c in cols], ins_rows)
+                                else:
+                                    cur.executemany(insert_sql, ins_rows)
+                            if upd_rows and update_sql:
+                                cur.executemany(update_sql, upd_rows)
+                            conn.commit()
+                            n_ins += len(ins_rows)
+                            n_upd += len(upd_rows) if update_sql else 0
+                        except Exception:
+                            conn.rollback()
+                            for r in ins_rows:
+                                try:
+                                    cur.execute(insert_sql, r)
+                                    conn.commit()
+                                    n_ins += 1
+                                except Exception as ex:
+                                    conn.rollback()
+                                    errors[f"INSERT-row:{type(ex).__name__}:{ex}"] = (
+                                        errors.get(f"INSERT-row:{type(ex).__name__}:{ex}", 0) + 1
+                                    )
+                            for r in upd_rows:
+                                try:
+                                    cur.execute(update_sql, r)
+                                    conn.commit()
+                                    n_upd += 1
+                                except Exception as ex:
+                                    conn.rollback()
+                                    errors[f"UPDATE-row:{type(ex).__name__}:{ex}"] = (
+                                        errors.get(f"UPDATE-row:{type(ex).__name__}:{ex}", 0) + 1
+                                    )
+            finally:
+                conn.close()
             out = [("insert", "", "", n_ins), ("update", "", "", n_upd)] + [
                 ("error", key.split(":", 1)[1], key.split(":", 1)[0], n)
                 for key, n in errors.items()
@@ -550,70 +553,101 @@ class InsertOrUpdate:
     # ------------------------------------------------------------------
     # Parquet-directory backend (lakehouse MERGE emulation)
     # ------------------------------------------------------------------
-    def _merge_branches(
-        self, target: DataFrame, prepared: DataFrame, target_cols: list[str]
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Shared MERGE branch construction (split incoming by
-        key-existence; update/untouched/insert unions; operation gating to
-        the dead-letter channel) — used by both path publish modes. On
-        Delta/Iceberg this whole construction is one MERGE INTO keyed on
-        the discriminant (idempotent, retry-safe at 100 TB). Returns
-        ``(merged, inserted, updated)``."""
+    def _merge(
+        self, target: DataFrame | None, prepared: DataFrame
+    ) -> tuple[DataFrame, Observation]:
+        """The MERGE both path publish modes write: one full-outer join of
+        the target with the incoming rows on the discriminant, each row
+        tagged ``K`` (key only in the target), ``I`` (only incoming) or
+        ``U`` (both). On Delta/Iceberg this is one MERGE INTO keyed on the
+        discriminant (idempotent, retry-safe at 100 TB).
+
+        The insert/update counts are observed metrics of the joined frame,
+        so the write job itself produces them (read by :meth:`_record`
+        after the write) — no separate count action. A fresh
+        :class:`Observation` per call, because one only reports its first
+        action. With no target (create) every row is an insert."""
+        obs = Observation()
+        if target is None:
+            return prepared.observe(obs, F.count(F.lit(1)).alias("I"), F.lit(0).alias("U")), obs
         keys = list(self.discriminant)
-        tkeys = target.select(*keys).distinct()
-        incoming_upd = prepared.join(tkeys, keys, "left_semi")
-        incoming_ins = prepared.join(tkeys, keys, "left_anti")
-
+        tag = F.col("__tag")
+        joined = (
+            target.withColumn("__in_t", F.lit(True)).alias("t")
+            .join(prepared.withColumn("__in_u", F.lit(True)).alias("u"), keys, "full_outer")
+            .withColumn(
+                "__tag",
+                F.when(F.col("__in_t").isNull(), "I")
+                .when(F.col("__in_u").isNull(), "K")
+                .otherwise("U"),
+            )
+            .observe(
+                obs,
+                F.count_if(tag == "I").alias("I"),
+                F.count_if(tag == "U").alias("U"),
+            )
+        )
+        # O2h: a gated insert is dropped; a gated update keeps the
+        # target's version. Both are counted above as dead letters.
         if INSERT not in self.allowed_operations:
-            n_bad = incoming_ins.count()
-            if n_bad:
-                self.last_errors.append({"op": "INSERT", "key": "*", "n": n_bad})
-            incoming_ins = incoming_ins.limit(0)
+            joined = joined.where(tag != "I")
         if UPDATE not in self.allowed_operations:
-            n_bad = incoming_upd.count()
-            if n_bad:
-                self.last_errors.append({"op": "UPDATE", "key": "*", "n": n_bad})
-            incoming_upd = incoming_upd.limit(0)
+            joined = joined.withColumn("__tag", F.when(tag == "U", "K").otherwise(tag))
 
-        # UPDATE branch: keep target's insert-only + created_at values,
-        # take everything else from the incoming row (O2f/O2g).
-        upd_keep_from_target = [
-            c
-            for c in target_cols
-            if c in set(self.insert_only_fields) | {self.created_at_field}
+        # An update keeps the target's insert-only + created_at values and
+        # target-only columns, and takes everything else from the incoming
+        # row (O2f/O2g); an insert has nulls for the columns it lacks.
+        keep = set(self.insert_only_fields) | {self.created_at_field}
+
+        def value(c: str):
+            if c in keys:
+                return F.col(c)
+            if c not in prepared.columns:
+                return F.col(f"t.{c}")
+            if c in keep:
+                return F.when(tag == "I", F.col(f"u.{c}")).otherwise(F.col(f"t.{c}"))
+            return F.when(tag == "K", F.col(f"t.{c}")).otherwise(F.col(f"u.{c}"))
+
+        return joined.select(*[value(c).alias(c) for c in target.columns]), obs
+
+    def _record(self, obs: Observation) -> None:
+        """``last_stats``/``last_errors`` of the MERGE just written, from
+        its observed counts; rows of a prohibited operation are dead
+        letters (O2h)."""
+        seen = obs.get
+        ops = ((INSERT, seen["I"]), (UPDATE, seen["U"]))
+        self.last_stats = {
+            op.value: n if op in self.allowed_operations else 0 for op, n in ops
+        }
+        self.last_errors = [
+            {"op": op.name, "key": "*", "n": n}
+            for op, n in ops
+            if op not in self.allowed_operations and n
         ]
-        t = target.alias("t")
-        u = incoming_upd.alias("u")
-        updated = t.join(u, keys, "inner").select(
-            *[
-                (F.col(f"t.{c}") if c in upd_keep_from_target or c not in prepared.columns else F.col(f"u.{c}")).alias(c)
-                for c in target_cols
-            ]
-        )
-        untouched = target.join(prepared.select(*keys).distinct(), keys, "left_anti")
-        inserted = incoming_ins.select(
-            *[
-                (F.col(c) if c in prepared.columns else F.lit(None)).alias(c)
-                for c in target_cols
-            ]
-        )
-        merged = untouched.unionByName(updated).unionByName(inserted)
-        return merged, inserted, updated
 
-    def _fetch_back_path(self, prepared: DataFrame, tgt: DataFrame) -> DataFrame:
+    def _reject_create(self, prepared: DataFrame) -> DataFrame:
+        """No target and INSERT prohibited: every row is a dead letter."""
+        self.last_errors = [{"op": INSERT.name, "key": "*", "n": prepared.count()}]
+        return prepared.limit(0)
+
+    def _fetch_back_path(
+        self, prepared: DataFrame, spark: SparkSession, table: str
+    ) -> DataFrame:
         """O2i for path targets: left-join generated/stored columns back
-        from the post-merge table by discriminant."""
+        from the post-merge table (parquet directory ``table``) by
+        discriminant."""
         if not self.fetch_columns:
             return prepared
         keys = list(self.discriminant)
+        tgt = spark.read.parquet(table)
         return prepared.join(
-            tgt.select(*keys, *{*self.fetch_columns.values()} - set(keys)),
+            tgt.select(*keys, *{*self.fetch_columns.values()} - set(keys)).alias("tgt"),
             keys,
             "left",
         ).select(
             *[prepared[c] for c in prepared.columns],
             *[
-                F.col(col).alias(alias)
+                F.col(col if col in keys else f"tgt.{col}").alias(alias)
                 for alias, col in self.fetch_columns.items()
                 if alias not in prepared.columns
             ],
@@ -625,65 +659,42 @@ class InsertOrUpdate:
         path = service.table_path(self.table_name)
         if self.snapshot:
             return self._write_path_snapshot(df, spark, path)
-        exists = os.path.exists(path)
-        target = spark.read.parquet(path) if exists else None
-        target_cols = target.columns if target is not None else df.columns
-
-        prepared = self._prepare(df, list(target_cols))
-        keys = list(self.discriminant)
-        self.last_errors = []
-
+        target = spark.read.parquet(path) if os.path.exists(path) else None
+        prepared = self._prepare(df, (df if target is None else target).columns)
+        if target is None and INSERT not in self.allowed_operations:
+            return self._reject_create(prepared)
+        merged, obs = self._merge(target, prepared)
         if target is None:
-            if INSERT not in self.allowed_operations:
-                self.last_errors = [
-                    {"op": "INSERT", "key": "*", "n": prepared.count()}
-                ]
-                return prepared.limit(0)
-            prepared.write.mode("overwrite").parquet(path)
-            self.last_stats = {"insert": spark.read.parquet(path).count(), "update": 0}
-            return prepared
-
-        merged, inserted, updated = self._merge_branches(
-            target, prepared, list(target_cols)
-        )
-
-        # Counts must materialize BEFORE the swap — they read the old files.
-        n_ins, n_upd = inserted.count(), updated.count()
-        tmp = path + ".__merge_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        # Swap keeping the old table recoverable: rename it aside first, so
-        # a crash between the two renames leaves the previous version on
-        # disk (at `old`) instead of no table at all. This in-place swap is
-        # still non-transactional for concurrent readers (single-writer
-        # assumption documented in COVERAGE.md); for atomic reader-visible
-        # commits on plain parquet use operators/snapshot.py (immutable
-        # snapshots + version pointer), or Delta/Iceberg MERGE INTO on a
-        # cluster image.
-        old = path + ".__merge_old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        shutil.move(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self.last_stats = {"insert": n_ins, "update": n_upd}
-        if self.fetch_columns:
-            return self._fetch_back_path(prepared, spark.read.parquet(path))
-        return prepared
+            merged.write.mode("overwrite").parquet(path)
+        else:
+            tmp = path + ".__merge_tmp"
+            merged.write.mode("overwrite").parquet(tmp)
+            # Swap keeping the old table recoverable: rename it aside first,
+            # so a crash between the two renames leaves the previous version
+            # on disk (at `old`) instead of no table at all. This in-place
+            # swap is still non-transactional for concurrent readers
+            # (single-writer assumption documented in COVERAGE.md); for
+            # atomic reader-visible commits on plain parquet use
+            # ``snapshot=True`` (operators/snapshot.py), or Delta/Iceberg
+            # MERGE INTO on a cluster image.
+            old = path + ".__merge_old"
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(path, old)
+            shutil.move(tmp, path)
+            shutil.rmtree(old, ignore_errors=True)
+        self._record(obs)
+        return self._fetch_back_path(prepared, spark, path)
 
     def _write_path_snapshot(
         self, df: DataFrame, spark: SparkSession, root: str
     ) -> DataFrame:
-        """Snapshot-backed publish (``snapshot=True``): the same MERGE
-        semantics, landed as an atomic snapshot commit
-        (operators/snapshot.py) instead of the in-place directory swap —
-        a concurrent reader sees the whole pre-merge or whole post-merge
-        table, never the swap's transient half-state, and concurrent
-        writers serialize via optimistic retry on the version pointer."""
-        from .snapshot import (
-            SnapshotConflict,
-            snapshot_commit,
-            snapshot_current,
-            snapshot_read,
-        )
+        """Snapshot-backed publish (``snapshot=True``): the same MERGE,
+        landed as an atomic snapshot commit (operators/snapshot.py) instead
+        of the in-place directory swap — a concurrent reader sees the whole
+        pre-merge or whole post-merge table, never the swap's transient
+        half-state, and concurrent writers serialize via optimistic retry
+        on the version pointer."""
+        from .snapshot import SnapshotConflict, snapshot_commit, snapshot_current, snapshot_read
 
         last_exc: Exception | None = None
         for _ in range(3):
@@ -693,45 +704,17 @@ class InsertOrUpdate:
                 if base_version is not None
                 else None
             )
-            target_cols = target.columns if target is not None else df.columns
-            prepared = self._prepare(df, list(target_cols))
-            self.last_errors = []
-
-            if target is None:
-                if INSERT not in self.allowed_operations:
-                    self.last_errors = [
-                        {"op": "INSERT", "key": "*", "n": prepared.count()}
-                    ]
-                    return prepared.limit(0)
-                try:
-                    name = snapshot_commit(
-                        spark, root, prepared, expect_version=None
-                    )
-                except SnapshotConflict as exc:
-                    last_exc = exc
-                    continue
-                committed = snapshot_read(spark, root, name)
-                self.last_stats = {"insert": committed.count(), "update": 0}
-                return self._fetch_back_path(prepared, committed)
-
-            merged, inserted, updated = self._merge_branches(
-                target, prepared, list(target_cols)
-            )
-            # Counts read the base snapshot's immutable files — safe to
-            # materialize either side of the commit, done before for parity
-            # with the in-place path.
-            n_ins, n_upd = inserted.count(), updated.count()
+            prepared = self._prepare(df, (df if target is None else target).columns)
+            if target is None and INSERT not in self.allowed_operations:
+                return self._reject_create(prepared)
+            merged, obs = self._merge(target, prepared)
             try:
-                name = snapshot_commit(
-                    spark, root, merged, expect_version=base_version
-                )
+                name = snapshot_commit(spark, root, merged, expect_version=base_version)
             except SnapshotConflict as exc:
                 last_exc = exc
                 continue
-            self.last_stats = {"insert": n_ins, "update": n_upd}
-            return self._fetch_back_path(
-                prepared, snapshot_read(spark, root, name)
-            )
+            self._record(obs)
+            return self._fetch_back_path(prepared, spark, os.path.join(root, name))
         raise last_exc if last_exc is not None else RuntimeError(
             f"snapshot upsert into {root} did not commit"
         )

@@ -95,9 +95,9 @@ def register_views(
     """Register each corpus table as a temp view; returns name -> DataFrame.
 
     Idempotent: re-registering against a different sf_dir replaces the views.
-    ``tables=None`` discovers every ``<name>.parquet`` in the directory —
-    how a :class:`~..registry.PathService`-backed ``Select`` exposes an
-    arbitrary warehouse catalog. Staging leftovers (``*.parquet.__merge_tmp``
+    ``tables=None`` discovers every ``<name>.parquet`` in the directory (an
+    arbitrary warehouse catalog); named tables without a file are skipped.
+    Staging leftovers (``*.parquet.__merge_tmp``
     etc.) are excluded by the exact ``.parquet`` suffix match; dot-prefixed
     entries are hidden staging by convention. Discovered names must be
     word-character-only (``createOrReplaceTempView`` rejects names with

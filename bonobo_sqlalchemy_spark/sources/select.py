@@ -25,6 +25,8 @@ it takes the session context and yields a DataFrame.
 
 from __future__ import annotations
 
+import os
+import re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -134,12 +136,21 @@ class Select:
                 reader = reader.option(k, v)
             df = reader.load()
         elif isinstance(service, PathService):
-            # Register the path catalog's tables then evaluate with Spark SQL.
-            # tables=None discovers whatever the catalog directory holds, so
-            # warehouse tables created by sinks are queryable too.
+            # Register the catalog tables the query names, then evaluate
+            # with Spark SQL. Any ``<name>.parquet`` in the catalog directory
+            # whose name is a word of the query (case-insensitive, as Spark
+            # resolves views) qualifies, so warehouse tables created by
+            # sinks are queryable too; no other table's schema is read, and
+            # an unreadable stray file cannot break the query.
             from .files import register_views
 
-            register_views(spark, service.root, tables=None)
+            words = {w.lower() for w in re.findall(r"\w+", query)}
+            named = tuple(
+                name
+                for name, ext in map(os.path.splitext, sorted(os.listdir(service.root)))
+                if ext == ".parquet" and name.lower() in words
+            )
+            register_views(spark, service.root, tables=named)
             df = spark.sql(query)
         else:
             # Spark-native: evaluate over whatever views are registered.

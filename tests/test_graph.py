@@ -251,3 +251,19 @@ def test_fork_resolves_first_occurrence_when_unambiguous(spark):
     g.add_chain(lambda df: df.agg(F.sum("x").alias("s")), _input=double)
     [_, agg] = run(g, spark)
     assert agg.collect()[0]["s"] == 12
+
+
+def test_path_select_registers_only_the_tables_it_names(spark, tmp_path):
+    """A PathService-backed Select reads the schema of the tables its query
+    names and of no other catalog table, so a stray unreadable file in the
+    catalog does not break it; names match case-insensitively, as Spark
+    resolves views."""
+    from bonobo_sqlalchemy_spark import PathService
+
+    spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string").write.parquet(
+        str(tmp_path / "sel_named.parquet")
+    )
+    (tmp_path / "junk.parquet").write_bytes(b"not a parquet file")
+    svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
+    [df] = run(Graph(Select("SELECT * FROM SEL_Named ORDER BY id")), spark, services=svc)
+    assert [tuple(r) for r in df.collect()] == [(1, "x"), (2, "y")]

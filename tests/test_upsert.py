@@ -235,6 +235,51 @@ def test_fetch_back_is_keyed_not_full_table(spark, db, monkeypatch):
     assert got == db_ids and all(v is not None for v in got.values())
 
 
+def test_worker_connection_is_closed_when_find_query_fails(spark, db, tmp_path):
+    """A partition whose find query raises still closes its connection.
+    The connect factory logs every open and close to a file, and its
+    cursors fail any SELECT (the find query), while the driver's PRAGMA
+    column probe still works."""
+    log = str(tmp_path / "connections.log")
+
+    class FailingFindCursor:
+        def __init__(self, cur):
+            self.cur = cur
+
+        def execute(self, sql, *args):
+            if sql.startswith("SELECT"):
+                raise sqlite3.OperationalError("find query failed")
+            return self.cur.execute(sql, *args)
+
+        def __getattr__(self, name):
+            return getattr(self.cur, name)
+
+    class LoggedConnection:
+        def __init__(self):
+            self.con = sqlite3.connect(db)
+            with open(log, "a") as f:
+                f.write("open\n")
+
+        def cursor(self):
+            return FailingFindCursor(self.con.cursor())
+
+        def close(self):
+            self.con.close()
+            with open(log, "a") as f:
+                f.write("close\n")
+
+        def __getattr__(self, name):
+            return getattr(self.con, name)
+
+    svc = {"sqlalchemy.engine": DbapiService(LoggedConnection)}
+    with pytest.raises(Exception, match="find query failed"):
+        run(Graph(_golden(spark), InsertOrUpdate("table_1")), spark, services=svc)
+    with open(log) as f:
+        events = f.read().split()
+    assert events.count("open") >= 2  # the driver's probe and a worker
+    assert events.count("close") == events.count("open")
+
+
 def test_duplicate_keys_in_one_batch_keep_last(spark, db):
     """Set-based divergence (§4.2.3): same key twice in one batch ->
     exactly one final row; last occurrence wins."""
@@ -326,18 +371,73 @@ def test_path_target_create_then_merge(spark, tmp_path):
     assert final.where("id = 20").collect()[0].value == "new row"
 
 
-def test_path_target_update_only_gating(spark, tmp_path):
+def _check_gated_merge(sink, final, allowed):
+    """The MERGE of (3, 'upd'), (99, 'new') into the 10-row golden table
+    under one prohibited operation: the prohibited row is one dead letter
+    and leaves the table as it was; the allowed row lands."""
+    if allowed == (UPDATE,):
+        assert sink.last_errors == [{"op": "INSERT", "key": "*", "n": 1}]
+        assert sink.last_stats == {"insert": 0, "update": 1}
+        assert final.count() == 10
+        assert final.where("id = 3").collect()[0].value == "upd"
+    else:
+        assert sink.last_errors == [{"op": "UPDATE", "key": "*", "n": 1}]
+        assert sink.last_stats == {"insert": 1, "update": 0}
+        assert final.count() == 11
+        assert final.where("id = 3").collect()[0].value == "value for 3"
+        assert final.where("id = 99").collect()[0].value == "new"
+
+
+@pytest.mark.parametrize("allowed", [(UPDATE,), (INSERT,)], ids=["update_only", "insert_only"])
+def test_path_target_update_only_gating(spark, tmp_path, allowed):
     svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
     run(Graph(_golden(spark), InsertOrUpdate("t")), spark, services=svc)
-    sink = InsertOrUpdate("t", allowed_operations=(UPDATE,))
+    sink = InsertOrUpdate("t", allowed_operations=allowed)
     mixed = spark.createDataFrame(
-        [(3, "upd"), (99, "rejected")], "id int, value string"
+        [(3, "upd"), (99, "new")], "id int, value string"
     )
     run(Graph(mixed, sink), spark, services=svc)
-    assert sink.last_errors and sink.last_errors[0]["op"] == "INSERT"
-    final = spark.read.parquet(str(tmp_path / "t.parquet"))
-    assert final.count() == 10
-    assert final.where("id = 3").collect()[0].value == "upd"
+    _check_gated_merge(sink, spark.read.parquet(str(tmp_path / "t.parquet")), allowed)
+
+
+def test_path_merge_pins_spark_job_count(spark, tmp_path):
+    """One path MERGE is one keyed join and one write: the target's schema
+    read, the two shuffle stages of the join (the incoming side's is the
+    keep-last window's) and the write, with the insert/update counts
+    observed inside the write job. Job counts do not depend on timing, so
+    a change that brings back a count action or a second join fails here
+    without benchmark noise."""
+    sc = spark.sparkContext
+    svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
+    run(Graph(_golden(spark), InsertOrUpdate("t")), spark, services=svc)
+    mixed = spark.createDataFrame(
+        [(5, "changed"), (20, "new row")], "id int, value string"
+    )
+    sink = InsertOrUpdate("t")
+    group = "test-path-merge-jobs"
+    try:
+        sc.setJobGroup(group, "path merge")
+        run(Graph(mixed, sink), spark, services=svc)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sink.last_stats == {"insert": 1, "update": 1}
+    assert jobs <= 6
+
+
+@pytest.mark.parametrize("snapshot", [False, True], ids=["in_place", "snapshot"])
+def test_path_fetch_back_of_a_written_column(spark, tmp_path, snapshot):
+    """O2i on a path target, on create and on merge: a fetch column that
+    the sink also writes is read back from the table, under its alias."""
+    svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
+    for rows in ([(1, "a"), (2, "b")], [(2, "B"), (3, "c")]):
+        sink = InsertOrUpdate("t", fetch_columns={"stored": "value"}, snapshot=snapshot)
+        [out] = run(
+            Graph(spark.createDataFrame(rows, "id int, value string"), sink),
+            spark,
+            services=svc,
+        )
+        assert sorted(tuple(r) for r in out.collect()) == [(i, v, v) for i, v in rows]
 
 
 def test_order_col_keep_last_is_shuffle_invariant(spark, tmp_path):
@@ -439,7 +539,8 @@ def test_path_target_snapshot_create_then_merge(spark, tmp_path):
     assert v1.where("id = 5").collect()[0].value != "changed"
 
 
-def test_path_target_snapshot_update_only_gating(spark, tmp_path):
+@pytest.mark.parametrize("allowed", [(UPDATE,), (INSERT,)], ids=["update_only", "insert_only"])
+def test_path_target_snapshot_update_only_gating(spark, tmp_path, allowed):
     from bonobo_sqlalchemy_spark.operators.snapshot import snapshot_read
 
     svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
@@ -448,12 +549,10 @@ def test_path_target_snapshot_update_only_gating(spark, tmp_path):
         spark,
         services=svc,
     )
-    sink = InsertOrUpdate("t", allowed_operations=(UPDATE,), snapshot=True)
+    sink = InsertOrUpdate("t", allowed_operations=allowed, snapshot=True)
     mixed = spark.createDataFrame(
-        [(3, "upd"), (99, "rejected")], "id int, value string"
+        [(3, "upd"), (99, "new")], "id int, value string"
     )
     run(Graph(mixed, sink), spark, services=svc)
-    assert sink.last_errors and sink.last_errors[0]["op"] == "INSERT"
     final = snapshot_read(spark, str(tmp_path / "t.parquet"))
-    assert final.count() == 10
-    assert final.where("id = 3").collect()[0].value == "upd"
+    _check_gated_merge(sink, final, allowed)
