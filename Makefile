@@ -22,7 +22,8 @@ parity:         ## Full-registry DuckDB parity -> PARITY_LOCAL.md.
 plans:          ## Physical-plan audit -> PLANS.md.
 	$(PYTHON) plans_report.py
 
-scaling:        ## sf0.001/0.01/0.1 scaling -> SCALING.md.
+scaling:        ## sf0.001/0.01/0.1 + synthesized sf1.0 scaling -> SCALING.md.
+	$(PYTHON) sf1_generate.py
 	$(PYTHON) scaling_report.py
 
 artifacts: parity plans scaling  ## Regenerate all round artifacts.

@@ -15,8 +15,8 @@ Design:
   the rewrite instead range-partitions on it (one shuffle) so compaction
   simultaneously restores clustering (min/max pruning) that accumulated
   appends destroyed;
-- the swap is the same crash-recoverable rename-aside protocol as the
-  upsert/SCD2 sinks (single-writer; Delta/Iceberg OPTIMIZE is the
+- the swap is ``snapshot.publish``'s in-place rename-aside, shared with
+  the upsert/SCD2 sinks (single-writer; Delta/Iceberg OPTIMIZE is the
   transactional equivalent at cluster scale).
 """
 
@@ -24,9 +24,10 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from .snapshot import publish
 
 
 def data_files(path: str) -> list[str]:
@@ -56,28 +57,12 @@ def compact_parquet(
     if len(files) < max(min_files_to_compact, n_target + 1):
         return {"files_before": len(files), "files_after": len(files), "bytes": total}
 
-    df = spark.read.parquet(path)
-    # Stage under a dot-prefixed basename: when compacting a Hive partition
-    # subdir (e.g. .../lang=en), a crash-leftover sibling named
-    # "lang=en.__compact_tmp" would be parsed by Spark partition discovery
-    # as a real partition value and double-count rows. Dot/underscore
-    # prefixed paths are ignored by Spark's file listing, so leftovers are
-    # invisible to readers until the atomic swap completes.
-    parent, base = os.path.dirname(os.path.abspath(path)), os.path.basename(
-        os.path.abspath(path)
-    )
-    tmp = os.path.join(parent, "." + base + ".__compact_tmp")
-    if order_by:
-        out = df.repartitionByRange(n_target, order_by).sortWithinPartitions(order_by)
-    else:
-        out = df.coalesce(n_target)
-    out.write.mode("overwrite").parquet(tmp)
+    def rewrite(df: DataFrame) -> DataFrame:
+        if order_by:
+            return df.repartitionByRange(n_target, order_by).sortWithinPartitions(order_by)
+        return df.coalesce(n_target)
 
-    old = os.path.join(parent, "." + base + ".__compact_old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    publish(spark, path, rewrite, snapshot=False)
     return {
         "files_before": len(files),
         "files_after": len(data_files(path)),

@@ -22,7 +22,7 @@ Spark-first:
 The writer intentionally emits the manifest only AFTER the data write
 completes (write-then-publish): a crashed export leaves data files but no
 manifest, so loaders treat the directory as absent — the same
-publish-last protocol as `operators/scd2.py`'s directory swap.
+publish-last protocol as `operators/snapshot.py::publish`'s directory swap.
 """
 
 from __future__ import annotations

@@ -11,14 +11,16 @@ Spark-first design, one batch = one merge:
 
 - change detection is a hash-compare (``xxhash64`` over tracked columns) —
   no column-by-column predicate explosion, constant-cost at any width;
-- the merge is expressed as unions of three declarative branches
-  (unchanged-history ∪ closed-versions ∪ new-versions), all equi-joins on
-  the business key — Catalyst plans one shuffle per side, broadcastable
-  when the batch is small;
-- no driver-side loops; counts materialize before the swap (same
-  crash-recoverable rename-aside protocol as ``upsert._write_path``). On
-  Delta/Iceberg the same three branches collapse into one ``MERGE INTO``
-  with a ``WHEN MATCHED AND hash_differs`` clause.
+- the merge is ONE full-outer equi-join of the open versions with the
+  deduplicated batch on the business key; each joined row emits its kept
+  or closed version and/or its new open version, and the closed history
+  is unioned on untouched — one shuffle per side, broadcastable when the
+  batch is small;
+- no driver-side loops; the row and open-version counts are observed
+  metrics of the write job itself, and the rewrite is published by
+  ``snapshot.publish`` (in-place rename-aside or snapshot commit). On
+  Delta/Iceberg the same merge is one ``MERGE INTO`` with a
+  ``WHEN MATCHED AND hash_differs`` clause.
 
 Idempotence: re-merging the same batch is a no-op (hash equality short-
 circuits), so micro-batch retries through ``foreachBatch`` are safe.
@@ -28,10 +30,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from .snapshot import publish
 
 #: sentinel for an open-ended version — comparable, sorts last, parquet-safe
 OPEN_END = "9999-12-31 23:59:59"
@@ -63,10 +67,6 @@ def _normalize_as_of(as_of: str) -> str:
     )
 
 
-def scd2_columns(keys: list[str]) -> list[str]:
-    return list(keys) + ["valid_from", "valid_to", "is_current"]
-
-
 def _hash_cols(df: DataFrame, cols: list[str]) -> F.Column:
     # NULL-safe: hash the (value, is-null) pair per column so NULL and
     # 'null-looking' values can't collide; xxhash64 is seed-stable.
@@ -92,41 +92,39 @@ def scd2_merge(
     carries the business columns only. ``as_of`` is the batch's effective
     timestamp (event time, not wall clock — deterministic reruns).
 
-    Returns the merged history. Branches:
+    Returns the merged history. Closed history rows (``is_current =
+    false``) pass through untouched; the open versions are full-outer
+    joined with the batch on ``keys`` and each joined row emits:
 
-    - history rows (``is_current = false``): pass through untouched;
-    - current rows whose key is absent from the batch: pass through;
-    - current rows whose batch hash matches: pass through (idempotence);
-    - current rows whose batch hash differs: emitted CLOSED
+    - an open version whose key is absent from the batch, or whose batch
+      hash matches: itself, unchanged (idempotence);
+    - an open version whose batch hash differs: itself CLOSED
       (``valid_to = as_of``, ``is_current = false``);
-    - batch rows that are new keys or changed: emitted OPEN
+    - a batch row that is a new key or a change: a new OPEN version
       (``valid_from = as_of``, ``valid_to = OPEN_END``).
     """
     as_of = _normalize_as_of(as_of)
     data_cols = [c for c in batch.columns if c not in keys]
     tracked = tracked if tracked is not None else data_cols
     # Keep-last on duplicate keys within one batch (same policy as the
-    # Type-1 upsert sink): without it a dup key would fan out the joins
+    # Type-1 upsert sink): without it a dup key would fan out the join
     # below and open two "current" versions at once. Order: last row by
     # all-columns sort is arbitrary-but-deterministic; real feeds should
     # carry a sequence column and pass batches pre-deduped.
-    from pyspark.sql import Window as W
-
     w = W.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in batch.columns])
     batch = (
         batch.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    b = batch.withColumn("__bh", _hash_cols(batch, tracked))
-
+    opened = {
+        "valid_from": F.lit(as_of),
+        "valid_to": F.lit(OPEN_END),
+        "is_current": F.lit(True),
+    }
     if current is None or not current.columns:
-        return b.drop("__bh").select(
-            "*",
-            F.lit(as_of).alias("valid_from"),
-            F.lit(OPEN_END).alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
+        return batch.select("*", *[v.alias(c) for c, v in opened.items()])
+    b = batch.withColumn("__bh", _hash_cols(batch, tracked))
 
     hist = current.where(~F.col("is_current"))
     cur = current.where(F.col("is_current")).withColumn(
@@ -148,45 +146,44 @@ def scd2_merge(
                 "inverted validity intervals"
             )
 
-    joined = cur.alias("c").join(
-        b.select(*keys, "__bh").alias("n"), keys, "left"
-    )
-    unchanged = joined.where(
-        F.col("n.__bh").isNull() | (F.col("c.__ch") == F.col("n.__bh"))
-    ).select([F.col(f"c.{c}") for c in current.columns])
-    closed = (
-        joined.where(F.col("n.__bh").isNotNull() & (F.col("c.__ch") != F.col("n.__bh")))
-        .select([F.col(f"c.{c}") for c in current.columns])
-        .withColumn("valid_to", F.lit(as_of))
-        .withColumn("is_current", F.lit(False))
-    )
+    # The open version and/or the batch row of one key, emitted as an array
+    # of nullable structs: the old version (kept, or closed on a change)
+    # and the new open version (a new key, or a change).
+    changed = F.col("c.__ch") != F.col("n.__bh")  # NULL unless both sides
+    closing = {"valid_to": F.lit(as_of), "is_current": F.lit(False)}
 
-    cur_h = cur.select(*keys, "__ch")
-    opened = (
-        b.alias("n")
-        .join(cur_h.alias("c"), keys, "left")
-        .where(F.col("c.__ch").isNull() | (F.col("c.__ch") != F.col("n.__bh")))
-        .select([F.col(f"n.{c}") for c in batch.columns])
-        .select(
-            "*",
-            F.lit(as_of).alias("valid_from"),
-            F.lit(OPEN_END).alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
+    def version(c: str, as_new: bool) -> F.Column:
+        if c in keys:
+            return F.col(c)
+        if as_new:
+            return opened.get(c, F.col(f"n.{c}"))
+        if c in closing:
+            return F.when(changed, closing[c]).otherwise(F.col(f"c.{c}"))
+        return F.col(f"c.{c}")
+
+    old = F.when(
+        F.col("c.__ch").isNotNull(),
+        F.struct(*[version(c, False).alias(c) for c in current.columns]),
     )
-    return (
-        hist.unionByName(unchanged)
-        .unionByName(closed)
-        .unionByName(opened.select(*current.columns))
+    new = F.when(
+        F.col("n.__bh").isNotNull() & ~F.col("c.__ch").eqNullSafe(F.col("n.__bh")),
+        F.struct(*[version(c, True).alias(c) for c in current.columns]),
     )
+    merged = (
+        cur.alias("c")
+        .join(b.alias("n"), keys, "full_outer")
+        .select(F.inline(F.filter(F.array(old, new), lambda v: v.isNotNull())))
+    )
+    return hist.unionByName(merged)
 
 
 class Scd2Sink:
     """Parquet-backed SCD2 sink with the upsert sink's write/read protocol.
 
     ``write(batch, spark, path, ...)`` reads the existing history, merges,
-    and swaps atomically-enough for a single writer (rename-aside — a crash
-    leaves the previous table recoverable, never a missing one). The real
+    and publishes through ``snapshot.publish``: in place it swaps
+    atomically-enough for a single writer (rename-aside — a crash leaves
+    the previous table recoverable, never a missing one). The real
     100 TB target is a Delta/Iceberg ``MERGE INTO``; this backend exists so
     the operator is end-to-end testable in-container.
     """
@@ -235,32 +232,38 @@ class Scd2Sink:
     def write(
         self, batch: DataFrame, spark: SparkSession, path: str, as_of: str
     ) -> DataFrame:
-        if self.snapshot:
-            return self._write_snapshot(batch, spark, path, as_of)
-        current = spark.read.parquet(path) if os.path.exists(path) else None
+        """Merge ``batch`` into the history at ``path`` and publish it in
+        place or, with ``snapshot=True``, as an atomic snapshot commit
+        (operators/snapshot.py: whole-table reader visibility, time travel
+        over the history table's own history, optimistic writer
+        serialization). ``last_stats`` are observed in the committed
+        attempt's write job. The high-water-mark sidecar is written after
+        the publish; a crash in between leaves it too low, which only
+        forces an extra validation."""
         as_of_norm = _normalize_as_of(as_of)
-        disk_hwm = self._read_hwm(path) if current is not None else None
-        monotonic = disk_hwm is not None and as_of_norm >= disk_hwm
-        merged = scd2_merge(
-            current,
-            batch,
-            self.keys,
-            as_of,
-            self.tracked,
-            validate_as_of=not monotonic,
-        )
-        n_total = merged.count()
-        n_open = merged.where(F.col("is_current")).count()
+        obs = disk_hwm = None
 
-        tmp = path + ".__scd2_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = path + ".__scd2_old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(path):
-            os.rename(path, old)
-        shutil.move(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self.last_stats = {"rows": n_total, "open": n_open}
+        def build(current: DataFrame | None) -> DataFrame:
+            nonlocal obs, disk_hwm
+            disk_hwm = self._read_hwm(path) if current is not None else None
+            monotonic = disk_hwm is not None and as_of_norm >= disk_hwm
+            merged = scd2_merge(
+                current,
+                batch,
+                self.keys,
+                as_of,
+                self.tracked,
+                validate_as_of=not monotonic,
+            )
+            obs = Observation()
+            return merged.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.count_if(F.col("is_current")).alias("open"),
+            )
+
+        where = publish(spark, path, build, self.snapshot)
+        self.last_stats = dict(obs.get)
         new_hwm = max(as_of_norm, disk_hwm) if disk_hwm else as_of_norm
         # Atomic sidecar update: write a temp file and os.replace() it so a
         # crash mid-write leaves either the old or the new COMPLETE value,
@@ -274,67 +277,7 @@ class Scd2Sink:
             os.fsync(f.fileno())
         os.replace(hwm_tmp, hwm_path)
         self._max_as_of = new_hwm
-        return spark.read.parquet(path)
-
-    def _write_snapshot(
-        self, batch: DataFrame, spark: SparkSession, root: str, as_of: str
-    ) -> DataFrame:
-        """Snapshot-backed publish (``snapshot=True``): the identical SCD2
-        merge landed via operators/snapshot.py — one atomic pointer swap
-        per merge, whole-table reader visibility, time travel over the
-        history table's own history, optimistic writer serialization.
-        The high-water-mark sidecar keeps its contract: it is re-read
-        before every merge and only ever under-reports (forcing an extra
-        validation), so a crash between commit and sidecar write is safe."""
-        from .snapshot import (
-            SnapshotConflict,
-            snapshot_commit,
-            snapshot_current,
-            snapshot_read,
-        )
-
-        as_of_norm = _normalize_as_of(as_of)
-        last_exc: Exception | None = None
-        for _ in range(3):
-            base_version = snapshot_current(root)
-            current = (
-                snapshot_read(spark, root, base_version)
-                if base_version is not None
-                else None
-            )
-            disk_hwm = self._read_hwm(root) if current is not None else None
-            monotonic = disk_hwm is not None and as_of_norm >= disk_hwm
-            merged = scd2_merge(
-                current,
-                batch,
-                self.keys,
-                as_of,
-                self.tracked,
-                validate_as_of=not monotonic,
-            )
-            n_total = merged.count()
-            n_open = merged.where(F.col("is_current")).count()
-            try:
-                name = snapshot_commit(
-                    spark, root, merged, expect_version=base_version
-                )
-            except SnapshotConflict as exc:
-                last_exc = exc
-                continue
-            self.last_stats = {"rows": n_total, "open": n_open}
-            new_hwm = max(as_of_norm, disk_hwm) if disk_hwm else as_of_norm
-            hwm_path = self._hwm_path(root)
-            hwm_tmp = hwm_path + ".tmp"
-            with open(hwm_tmp, "w") as f:
-                f.write(new_hwm)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(hwm_tmp, hwm_path)
-            self._max_as_of = new_hwm
-            return snapshot_read(spark, root, name)
-        raise last_exc if last_exc is not None else RuntimeError(
-            f"SCD2 snapshot merge into {root} did not commit"
-        )
+        return spark.read.parquet(where)
 
 
 def snapshot_as_of(history: DataFrame, ts: str) -> DataFrame:

@@ -2,10 +2,12 @@
 parquet — the transactional upgrade for the parquet-directory MERGE
 emulation's documented weakness.
 
-``operators/upsert.py::_write_path`` swaps the table directory in place
-(rename-aside + move), which is crash-recoverable but NOT atomic for
-concurrent readers: a reader listing the directory mid-swap can see a
-half-state (the "Known divergences" note in COVERAGE.md since round 5).
+:func:`publish` is the one place a rewritten parquet table is published
+(the upsert and SCD2 sinks, compaction and :func:`snapshot_merge` all go
+through it). In place it swaps the table directory (rename-aside + move),
+which is crash-recoverable but NOT atomic for concurrent readers: a reader
+listing the directory mid-swap can see a half-state (the "Known
+divergences" note in COVERAGE.md since round 5).
 The real fix on a cluster is Delta/Iceberg ``MERGE INTO`` — both still
 ImportError in this container (probe log in COVERAGE.md) — but the core
 mechanism those formats use is PUBLIC and small: immutable data files
@@ -29,7 +31,7 @@ implements that mechanism directly:
 - **Optimistic concurrency**: :func:`snapshot_commit` takes
   ``expect_version``; a concurrent commit in between raises
   :class:`SnapshotConflict` instead of silently clobbering
-  (read-modify-write callers like :func:`snapshot_merge` retry).
+  (read-modify-write callers retry through :func:`publish`).
 - **Time travel**: every committed snapshot stays readable by name until
   :func:`snapshot_vacuum` removes it.
 
@@ -52,6 +54,7 @@ import os
 import shutil
 import uuid
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -178,6 +181,63 @@ def snapshot_commit(
         shutil.rmtree(staging, ignore_errors=True)
 
 
+def publish(
+    spark: SparkSession,
+    path: str,
+    build: Callable[[DataFrame | None], DataFrame | None],
+    snapshot: bool,
+    max_retries: int = 3,
+) -> str | None:
+    """Rewrite the parquet table at ``path``: read it (``None`` when it does
+    not exist yet), call ``build`` on it and publish what ``build`` returns.
+    Returns the directory it published, or None when ``build`` returned
+    None (nothing is written).
+
+    In place (``snapshot=False``) a create writes straight to ``path``; a
+    rewrite stages under a dot-prefixed sibling and swaps it in. A dot
+    prefix keeps the staged copy out of Spark's file listing, so a crash
+    leftover next to a Hive partition dir (``lang=en``) is never read as a
+    partition value. The old table is renamed aside before the move, so a
+    crash between the two renames leaves it recoverable rather than gone.
+    The swap is single-writer and not atomic for concurrent readers.
+
+    As a snapshot table the base is the version at :func:`snapshot_current`
+    and the result is committed with ``expect_version=base``; on
+    :class:`SnapshotConflict` the read, build and commit run again, up to
+    ``max_retries`` times, so ``build`` must start each attempt afresh."""
+    if not snapshot:
+        current = spark.read.parquet(path) if os.path.exists(path) else None
+        out = build(current)
+        if out is None:
+            return None
+        if current is None:
+            out.write.mode("overwrite").parquet(path)
+            return path
+        parent, base = os.path.split(os.path.abspath(path))
+        tmp = os.path.join(parent, f".{base}.__publish_tmp")
+        old = os.path.join(parent, f".{base}.__publish_old")
+        out.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(path, old)
+        shutil.move(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        return path
+    for _ in range(max(1, max_retries)):
+        base = snapshot_current(path)
+        out = build(None if base is None else snapshot_read(spark, path, base))
+        if out is None:
+            return None
+        try:
+            return os.path.join(
+                path, snapshot_commit(spark, path, out, expect_version=base)
+            )
+        except SnapshotConflict:
+            continue
+    raise SnapshotConflict(
+        f"rewrite of {path} lost {max_retries} optimistic rounds"
+    )
+
+
 def snapshot_merge(
     spark: SparkSession,
     root: str,
@@ -189,26 +249,19 @@ def snapshot_merge(
     an existing row are replaced, new keys append — and a reader at any
     instant sees either the whole pre-merge table or the whole post-merge
     table, never the in-between (the property the in-place swap path
-    cannot give). Optimistic read-modify-write: on
-    :class:`SnapshotConflict` the merge re-reads and retries, so
-    concurrent mergers serialize instead of losing updates."""
-    for _ in range(max(1, max_retries)):
-        base_version = snapshot_current(root)
-        if base_version is None:
-            merged = incoming
-        else:
-            base = snapshot_read(spark, root, base_version)
-            merged = base.join(
-                incoming.select(*keys).distinct(), keys, "left_anti"
-            ).unionByName(incoming)
-        try:
-            return snapshot_commit(
-                spark, root, merged, expect_version=base_version
-            )
-        except SnapshotConflict:
-            continue
-    raise SnapshotConflict(
-        f"merge into {root} lost {max_retries} optimistic rounds"
+    cannot give). Optimistic read-modify-write through :func:`publish`:
+    concurrent mergers serialize instead of losing updates. Returns the
+    committed snapshot's name."""
+
+    def merge(base: DataFrame | None) -> DataFrame:
+        if base is None:
+            return incoming
+        return base.join(
+            incoming.select(*keys).distinct(), keys, "left_anti"
+        ).unionByName(incoming)
+
+    return os.path.basename(
+        publish(spark, root, merge, snapshot=True, max_retries=max_retries)
     )
 
 

@@ -47,8 +47,6 @@ Backends:
 from __future__ import annotations
 
 import decimal
-import os
-import shutil
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -65,6 +63,7 @@ from ..registry import (
     PathService,
     ServiceRegistry,
 )
+from .snapshot import publish
 
 _ERROR_SCHEMA = "op string, key string, error string, n bigint"
 
@@ -656,65 +655,23 @@ class InsertOrUpdate:
     def _write_path(
         self, df: DataFrame, spark: SparkSession, service: PathService
     ) -> DataFrame:
-        path = service.table_path(self.table_name)
-        if self.snapshot:
-            return self._write_path_snapshot(df, spark, path)
-        target = spark.read.parquet(path) if os.path.exists(path) else None
-        prepared = self._prepare(df, (df if target is None else target).columns)
-        if target is None and INSERT not in self.allowed_operations:
-            return self._reject_create(prepared)
-        merged, obs = self._merge(target, prepared)
-        if target is None:
-            merged.write.mode("overwrite").parquet(path)
-        else:
-            tmp = path + ".__merge_tmp"
-            merged.write.mode("overwrite").parquet(tmp)
-            # Swap keeping the old table recoverable: rename it aside first,
-            # so a crash between the two renames leaves the previous version
-            # on disk (at `old`) instead of no table at all. This in-place
-            # swap is still non-transactional for concurrent readers
-            # (single-writer assumption documented in COVERAGE.md); for
-            # atomic reader-visible commits on plain parquet use
-            # ``snapshot=True`` (operators/snapshot.py), or Delta/Iceberg
-            # MERGE INTO on a cluster image.
-            old = path + ".__merge_old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-            shutil.move(tmp, path)
-            shutil.rmtree(old, ignore_errors=True)
-        self._record(obs)
-        return self._fetch_back_path(prepared, spark, path)
+        """Publish the MERGE in place or, with ``snapshot=True``, as an
+        atomic snapshot commit (operators/snapshot.py): a concurrent reader
+        then sees the whole pre- or post-merge table, and concurrent
+        writers serialize via optimistic retry. Each attempt prepares and
+        observes afresh, so the stats are the committed attempt's."""
+        prepared = obs = None
 
-    def _write_path_snapshot(
-        self, df: DataFrame, spark: SparkSession, root: str
-    ) -> DataFrame:
-        """Snapshot-backed publish (``snapshot=True``): the same MERGE,
-        landed as an atomic snapshot commit (operators/snapshot.py) instead
-        of the in-place directory swap — a concurrent reader sees the whole
-        pre-merge or whole post-merge table, never the swap's transient
-        half-state, and concurrent writers serialize via optimistic retry
-        on the version pointer."""
-        from .snapshot import SnapshotConflict, snapshot_commit, snapshot_current, snapshot_read
-
-        last_exc: Exception | None = None
-        for _ in range(3):
-            base_version = snapshot_current(root)
-            target = (
-                snapshot_read(spark, root, base_version)
-                if base_version is not None
-                else None
-            )
+        def build(target: DataFrame | None) -> DataFrame | None:
+            nonlocal prepared, obs
             prepared = self._prepare(df, (df if target is None else target).columns)
             if target is None and INSERT not in self.allowed_operations:
-                return self._reject_create(prepared)
+                return None
             merged, obs = self._merge(target, prepared)
-            try:
-                name = snapshot_commit(spark, root, merged, expect_version=base_version)
-            except SnapshotConflict as exc:
-                last_exc = exc
-                continue
-            self._record(obs)
-            return self._fetch_back_path(prepared, spark, os.path.join(root, name))
-        raise last_exc if last_exc is not None else RuntimeError(
-            f"snapshot upsert into {root} did not commit"
-        )
+            return merged
+
+        where = publish(spark, service.table_path(self.table_name), build, self.snapshot)
+        if where is None:
+            return self._reject_create(prepared)
+        self._record(obs)
+        return self._fetch_back_path(prepared, spark, where)

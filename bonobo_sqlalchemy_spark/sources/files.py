@@ -97,9 +97,10 @@ def register_views(
     Idempotent: re-registering against a different sf_dir replaces the views.
     ``tables=None`` discovers every ``<name>.parquet`` in the directory (an
     arbitrary warehouse catalog); named tables without a file are skipped.
-    Staging leftovers (``*.parquet.__merge_tmp``
-    etc.) are excluded by the exact ``.parquet`` suffix match; dot-prefixed
-    entries are hidden staging by convention. Discovered names must be
+    Staging leftovers of a table rewrite (``.<name>.parquet.__publish_tmp``,
+    see ``operators/snapshot.py::publish``) are excluded: dot-prefixed
+    entries are hidden staging by convention, and only an exact
+    ``.parquet`` suffix names a table. Discovered names must be
     word-character-only (``createOrReplaceTempView`` rejects names with
     punctuation/spaces, e.g. ``my-table.parquet``; digit-leading names ARE
     accepted and kept); offending files are skipped with a warning so one

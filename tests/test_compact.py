@@ -62,7 +62,7 @@ def _quarter_bytes(path: str) -> int:
 
 def test_partition_subdir_staging_invisible_to_discovery(spark, tmp_path):
     """Compacting a Hive partition subdir must stage under a dot-prefixed
-    name: a crash-leftover sibling like 'lang=en.__compact_tmp' inside the
+    name: a crash-leftover sibling like 'lang=en.__publish_tmp' inside the
     table root would be parsed by partition discovery as a real partition
     value and double-count rows."""
     import os
@@ -85,6 +85,6 @@ def test_partition_subdir_staging_invisible_to_discovery(spark, tmp_path):
 
     # a crash-leftover staged dir (write done, swap not) must be invisible:
     # recreate what a mid-crash leaves behind and re-read the table root
-    leftover = os.path.join(root, ".lang=en.__compact_tmp")
+    leftover = os.path.join(root, ".lang=en.__publish_tmp")
     spark.read.parquet(part).write.mode("overwrite").parquet(leftover)
     assert spark.read.parquet(root).count() == n_before

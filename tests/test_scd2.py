@@ -115,6 +115,31 @@ def test_sink_roundtrip_and_crash_recoverable_swap(spark, tmp_path):
     assert out.columns == reread.columns
 
 
+@pytest.mark.parametrize("snapshot", [False, True], ids=["in_place", "snapshot"])
+def test_sink_merge_pins_spark_job_count(spark, tmp_path, snapshot):
+    """One monotonic sink merge is one keyed join and one write: the
+    row/open counts are observed inside the write job and the validation
+    scan is skipped, in both publish modes. Job counts do not depend on
+    timing, so a change that brings back a count action or a second join
+    fails here without benchmark noise."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "dim")
+    sink = Scd2Sink(keys=["id"], snapshot=snapshot)
+    first = [(i, f"n{i}", float(i)) for i in range(100)]
+    sink.write(_batch(spark, first), spark, path, "2024-01-01 00:00:00")
+    # ids 25-49 unchanged, 50-99 changed, 100-124 new
+    batch = _batch(spark, [(i, f"n{i}", float(i) + (i >= 50)) for i in range(25, 125)])
+    group = f"test-scd2-merge-jobs-{snapshot}"
+    try:
+        sc.setJobGroup(group, "scd2 merge")
+        sink.write(batch, spark, path, "2024-02-01 00:00:00")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sink.last_stats == {"rows": 175, "open": 125}
+    assert jobs <= 8
+
+
 def test_streaming_foreachbatch_lands_in_scd2(spark, tmp_path):
     """A stream of dimension updates lands through the SCD2 sink via
     foreachBatch — the same composition the upsert sink supports

@@ -265,3 +265,68 @@ def test_conflict_leaves_no_staging_orphan(spark, tmp_path):
         snapshot_commit(spark, root, _df(spark, [(1, "c")]), expect_version=v1)
     leftovers = [d for d in os.listdir(root) if d.startswith(".staged-")]
     assert leftovers == []
+
+
+def _upsert(spark, root, rows, as_of):
+    """Upsert ``rows`` into the snapshot table ``root`` (``<dir>/t.parquet``)."""
+    from bonobo_sqlalchemy_spark import Graph, InsertOrUpdate, PathService, run
+
+    sink = InsertOrUpdate("t", snapshot=True)
+    svc = {"sqlalchemy.engine": PathService(os.path.dirname(root))}
+    run(Graph(spark.createDataFrame(rows, "id int, value string"), sink), spark, services=svc)
+    return sink
+
+
+def _scd2(spark, root, rows, as_of):
+    from bonobo_sqlalchemy_spark.operators.scd2 import Scd2Sink
+
+    sink = Scd2Sink(keys=["id"], snapshot=True)
+    sink.write(spark.createDataFrame(rows, "id int, value string"), spark, root, as_of)
+    return sink
+
+
+@pytest.mark.parametrize("write", [_upsert, _scd2], ids=["upsert", "scd2"])
+def test_sink_retries_after_a_competing_commit(spark, tmp_path, monkeypatch, write):
+    """A snapshot sink whose first commit loses to a competing writer
+    re-reads, rebuilds and commits again: the table ends as the competitor
+    followed by a conflict-free run of the sink would leave it, the sink's
+    stats are those of that run alone, and the losing attempt's staged data
+    is gone."""
+    from pyspark.sql import functions as F
+
+    from bonobo_sqlalchemy_spark.operators import snapshot as snap
+
+    seed = [(i, f"v{i}") for i in range(10)]
+    batch = [(5, "changed"), (20, "new")]
+    real_commit = snap.snapshot_commit
+
+    def compete(root):  # the rival copies row 1 to a new key 50
+        cur = snapshot_read(spark, root)
+        real_commit(spark, root, cur.unionByName(cur.where("id = 1").withColumn("id", F.lit(50))))
+
+    serial = str(tmp_path / "serial" / "t.parquet")
+    write(spark, serial, seed, "2024-01-01")
+    compete(serial)
+    want = write(spark, serial, batch, "2024-02-01")
+
+    raced = str(tmp_path / "raced" / "t.parquet")
+    write(spark, raced, seed, "2024-01-01")
+    conflicts = []
+
+    def racing_commit(spark_, root, df, expect_version="__unset__"):
+        if not conflicts:
+            compete(root)
+        try:
+            return real_commit(spark_, root, df, expect_version=expect_version)
+        except SnapshotConflict:
+            conflicts.append(expect_version)
+            raise
+
+    monkeypatch.setattr(snap, "snapshot_commit", racing_commit)
+    got = write(spark, raced, batch, "2024-02-01")
+    assert len(conflicts) == 1
+    assert got.last_stats == want.last_stats
+    assert sorted(snapshot_read(spark, raced).collect()) == sorted(
+        snapshot_read(spark, serial).collect()
+    )
+    assert not [d for d in os.listdir(raced) if d.startswith(".staged-")]
