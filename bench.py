@@ -13,7 +13,10 @@ cost that round its official perf artifact — is written to BENCH_DETAIL.md
 in the repo instead of stdout.
 
 Each query is fully executed (collect of the final result — every query
-here returns an aggregated/limited result, so collect is driver-safe).
+here returns an aggregated/limited result, so collect is driver-safe)
+inside a ``metrics.trace`` span, so BENCH_DETAIL.md can also say where a
+row's time goes: plan build vs execution, Spark jobs, tasks and shuffle
+bytes (its ``queries_profile`` entry).
 
 Timing protocol (variance-hardened, round 5): queries run in INTERLEAVED
 rounds — round 1 runs A,B,C,...; round 2 runs A,B,C,... again — for
@@ -53,30 +56,59 @@ def compact_stdout_line(out: dict, load_fields: dict, cap: int = STDOUT_LINE_CAP
     """Render the one-line JSON under ``cap`` chars. Degrade ladder,
     mildest first — per-query NAMES must survive as long as possible:
     (1) drop the load/noise trust fields + detail pointer (still in
-    BENCH_DETAIL.md), (2) 1-decimal values, (3) only then the wholesale
-    truncation marker."""
-    out = dict(out)
-    compact_queries = out["queries"]
+    BENCH_DETAIL.md), (2) shorten error entries to ``"ERR"``, (3)
+    1-decimal values, (4) only then the wholesale truncation marker, which
+    brings the detail pointer back: with no per-query map left, the line
+    must still say where the numbers are."""
+    n_queries = len(out["queries"])
+    steps = (
+        lambda o: {k: v for k, v in o.items() if k not in (*load_fields, "detail")},
+        lambda o: {**o, "queries": {
+            n: v if isinstance(v, (int, float)) else "ERR" for n, v in o["queries"].items()
+        }},
+        lambda o: {**o, "queries": {
+            n: round(v, 1) if isinstance(v, (int, float)) else v
+            for n, v in o["queries"].items()
+        }},
+        lambda o: {**o, "queries": {"truncated": n_queries}, "detail": "BENCH_DETAIL.md"},
+    )
     line = json.dumps(out, separators=(",", ":"))
-    if len(line) > cap:
-        for k in (*load_fields, "detail"):
-            out.pop(k, None)
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > cap:
-        out["queries"] = {
-            n: (round(v, 1) if isinstance(v, (int, float)) else v)
-            for n, v in compact_queries.items()
-        }
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > cap:
-        out["queries"] = {"truncated": len(compact_queries)}
+    for step in steps:
+        if len(line) <= cap:
+            break
+        out = step(out)
         line = json.dumps(out, separators=(",", ":"))
     return line
+
+
+def summary_line(spark, timings: dict, rounds_done: int, sf_val, n_errors: int, load_fields: dict) -> str:
+    """The stdout line: per-query min, 2-decimal values, and the live
+    session's parallelism (``cpus``): what the timings ran on, which need
+    not be what SPARK_GRAFT_CPUS asked for."""
+    compact_queries = {
+        n: (round(v, 2) if isinstance(v, (int, float)) else {"err": "see BENCH_DETAIL.md"})
+        for n, v in timings.items()
+    }
+    out = {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(v for v in timings.values() if isinstance(v, (int, float))), 2),
+        "unit": "sec",
+        "queries": compact_queries,
+        "runs_per_query": rounds_done,
+        "agg": "min_warm" if rounds_done > 1 else "cold",
+        "sf": sf_val,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "errors": n_errors,
+        **load_fields,
+        "detail": "BENCH_DETAIL.md",
+    }
+    return compact_stdout_line(out, load_fields)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+    from bonobo_sqlalchemy_spark.metrics import trace
     from bonobo_sqlalchemy_spark.queries import REGISTRY
     from bonobo_sqlalchemy_spark.session import get_spark
 
@@ -90,7 +122,8 @@ def main() -> None:
     except Exception:
         pass
 
-    runs: dict[str, list[float]] = {n: [] for n in names}
+    # per query and round: the run's span and its plan-build seconds
+    runs: dict[str, list[tuple]] = {n: [] for n in names}
     errors: dict[str, dict] = {}
     # Interleaved rounds: one pass over ALL queries per round, so transient
     # machine load perturbs a round, not a query. The wall budget stops
@@ -127,29 +160,45 @@ def main() -> None:
         for name in names:
             if name in errors:
                 continue
-            t0 = time.perf_counter()
             try:
-                REGISTRY[name].spark(spark, sf_dir).collect()
+                # the span's wall time (build + collect) is the row's
+                # timing; its counters are read after its clock stops
+                with trace(spark, name) as span:
+                    t0 = time.perf_counter()
+                    df = REGISTRY[name].spark(spark, sf_dir)
+                    build_s = time.perf_counter() - t0
+                    df.collect()
             except Exception as exc:  # one broken query must not zero the round
                 errors[name] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
                 continue
-            runs[name].append(round(time.perf_counter() - t0, 3))
+            runs[name].append((span, build_s))
         last_round_s = time.perf_counter() - round_t0
 
     timings: dict[str, object] = {}
     medians: dict[str, object] = {}
     spreads: dict[str, object] = {}
     first_run: dict[str, object] = {}
+    profile: dict[str, object] = {}
     for name in names:
-        r = runs[name]
+        r = [round(span.wall_s, 3) for span, _ in runs[name]]
         if name in errors or not r:
-            timings[name] = medians[name] = spreads[name] = first_run[name] = (
-                errors.get(name) or {"err": "no successful runs"}
-            )
+            err = errors.get(name) or {"err": "no successful runs"}
+            for stat in (timings, medians, spreads, first_run, profile):
+                stat[name] = err
             continue
         first_run[name] = r[0]
         warm = r[1:] if len(r) > 1 else r  # drop the cold round from stats
         timings[name] = min(warm)
+        # where the reported (min warm) run's time went
+        span, build_s = runs[name][len(r) - len(warm) + warm.index(min(warm))]
+        profile[name] = {
+            "build_s": round(build_s, 3),
+            "exec_s": round(span.wall_s - build_s, 3),
+            "jobs": span.jobs,
+            "tasks": span.tasks,
+            "shuffle_read_bytes": span.shuffle_read_bytes,
+            "shuffle_write_bytes": span.shuffle_write_bytes,
+        }
         medians[name] = round(statistics.median(warm), 3)
         spreads[name] = round(max(warm) - min(warm), 3)
 
@@ -183,11 +232,13 @@ def main() -> None:
         "queries_median": medians,
         "queries_spread": spreads,
         "queries_first_run": first_run,
+        "queries_profile": profile,
         "runs_per_query": rounds_done,
         "rounds_requested": n_rounds,
         "interleaved": True,
         "agg": "min_warm" if rounds_done > 1 else "cold",
         "sf": sf_val,
+        "cpus": spark.sparkContext.defaultParallelism,
         "errors": len(errors),
     }
     # Full detail goes to a repo artifact, NOT stdout — the driver keeps only
@@ -198,30 +249,16 @@ def main() -> None:
             "# BENCH_DETAIL — full per-query timing detail\n\n"
             "Written by bench.py on each run. `queries` = per-query min of "
             "warm runs; `queries_median`/`queries_spread` expose measurement "
-            "noise; `queries_first_run` includes one-time codegen/JIT cost.\n\n"
+            "noise; `queries_first_run` includes one-time codegen/JIT cost; "
+            "`queries_profile` splits the min warm run into plan build and "
+            "execution and gives its Spark jobs, tasks and shuffle bytes "
+            "(`bonobo_sqlalchemy_spark/metrics.py::trace`).\n\n"
             "```json\n" + json.dumps(detail, indent=1) + "\n```\n"
         )
     except OSError:
         pass  # read-only checkout must not kill the perf signal
 
-    # Compact tail-survivable line: per-query min only, 2-decimal values.
-    compact_queries = {
-        n: (round(v, 2) if isinstance(v, (int, float)) else {"err": "see BENCH_DETAIL.md"})
-        for n, v in timings.items()
-    }
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(ok), 2),
-        "unit": "sec",
-        "queries": compact_queries,
-        "runs_per_query": rounds_done,
-        "agg": "min_warm" if rounds_done > 1 else "cold",
-        "sf": sf_val,
-        "errors": len(errors),
-        **load_fields,
-        "detail": "BENCH_DETAIL.md",
-    }
-    print(compact_stdout_line(out, load_fields))
+    print(summary_line(spark, timings, rounds_done, sf_val, len(errors), load_fields))
 
 
 if __name__ == "__main__":

@@ -1,30 +1,33 @@
-"""Execution-metric capture: shuffle / spill / scan volumes per query run.
+"""Execution metrics for a block of work: where its seconds and bytes go.
 
-Wall-clock alone can't answer the 100 TB question — a query can look fast
-at sf0.1 while its shuffle volume grows super-linearly. This module reads
-Spark's AppStatusStore (the same numbers the UI's Stages tab shows) so the
-scaling audit can report DATA-MOVEMENT scaling alongside time scaling:
-shuffle bytes are deterministic per plan+input (unlike seconds), which
-makes their decade exponents the cleanest scale signal we can measure
-in-container.
+:func:`trace` is the one measurement span of the engine. It tags every
+Spark job submitted inside it and, after the block, reads the jobs' stages
+from Spark's in-process AppStatusStore (the same numbers the UI's Stages
+tab shows; the store is kept with the UI disabled). Wall time says how
+long a block took; the job, stage and task counts and the scan, shuffle
+and spill bytes say why, and unlike seconds they are deterministic per
+plan and input. bench.py, scaling_report.py and the job-count tests all
+measure through it.
+
+Job tags rather than job groups: tags nest (a job carries the tags of
+every open span), and they leave the thread's job group untouched, so an
+outer caller that charges jobs to its own job group still sees them.
 
 Access note: ``SparkContext._jsc.sc().statusStore().stageList`` is a
 Scala method with default parameters; py4j requires passing them
 explicitly, which is what :func:`_stage_list` does via the compiler's
 ``stageList$default$N`` accessors.
 
-Eviction note: the store retains a bounded number of stages
-(``spark.ui.retainedStages``, default 1000) and evicts the OLDEST once
-full. A naive totals-after − totals-before delta therefore goes WRONG
-(even negative) in long sessions, because eviction of pre-existing stages
-shrinks the "after" total. :class:`measure_volumes` instead records the
-max stage id at entry and sums ONLY stages newer than it — old-stage
-eviction can no longer corrupt the delta, and the result is exact unless
-the measured block ALONE creates more stages than the retention window
-(no registered query comes within an order of magnitude of that)."""
+Retention note: the store keeps a bounded number of jobs and stages
+(``spark.ui.retainedJobs`` / ``spark.ui.retainedStages``, default 1000
+each) and evicts the oldest first, so a span is exact unless the block
+alone submits more than that."""
 
 from __future__ import annotations
 
+import time
+import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 
@@ -33,9 +36,9 @@ def _stage_list(spark):
     statuses = spark._jvm.java.util.ArrayList()
     # Probe the compiler-synthesized default accessors dynamically instead
     # of hardcoding one Scala signature: a Spark upgrade that adds/removes
-    # a default parameter would otherwise break all volume capture with an
-    # opaque py4j error (r13 ADVICE). getattr on a missing synthetic
-    # method raises py4j.Py4JError only at CALL time, so probe by calling.
+    # a default parameter would otherwise break all capture with an
+    # opaque py4j error. getattr on a missing synthetic method raises
+    # py4j.Py4JError only at CALL time, so probe by calling.
     args = []
     for i in range(2, 12):
         try:
@@ -47,72 +50,79 @@ def _stage_list(spark):
     except Exception as exc:  # pragma: no cover - version-dependent
         raise RuntimeError(
             "unsupported Spark version: AppStatusStore.stageList signature "
-            f"not recognized ({len(args)} default params probed) — volume "
-            "capture (metrics.measure_volumes / scaling_report data "
-            "movement) is unavailable on this build"
+            f"not recognized ({len(args)} default params probed) — "
+            "metrics.trace is unavailable on this build"
         ) from exc
 
 
-@dataclass(frozen=True)
-class VolumeTotals:
-    stages: int
-    shuffle_write_bytes: int
-    shuffle_read_bytes: int
-    spill_bytes: int
-    input_bytes: int
-    output_bytes: int
+@dataclass
+class Span:
+    """What :func:`trace` measured. Stages that a job skipped (their
+    shuffle output was already there) are not counted."""
+
+    name: str
+    tag: str
+    wall_s: float = 0.0
+    job_ids: tuple[int, ...] = ()
+    stages: int = 0
+    tasks: int = 0
+    input_bytes: int = 0
+    shuffle_read_bytes: int = 0
+    shuffle_write_bytes: int = 0
+    spill_bytes: int = 0
+    executor_cpu_s: float = 0.0
+
+    @property
+    def jobs(self) -> int:
+        return len(self.job_ids)
 
 
-def _collect(spark, min_stage_id_exclusive: int) -> tuple[VolumeTotals, int]:
-    """Totals over stages with id > ``min_stage_id_exclusive``, plus the
-    max stage id seen."""
+@contextmanager
+def trace(spark, name: str):
+    """Measure the enclosed block as one :class:`Span`.
+
+    >>> with trace(spark, "q1") as span:
+    ...     df.collect()
+    >>> span.jobs, span.shuffle_write_bytes
+
+    The wall clock stops before the status store is read, so the read
+    costs the block nothing. The span's fields are filled only when the
+    block completes without raising."""
+    sc = spark.sparkContext
+    span = Span(name, f"trace-{uuid.uuid4().hex}")
+    sc.addJobTag(span.tag)
+    t0 = time.perf_counter()
+    try:
+        yield span
+    finally:
+        span.wall_s = time.perf_counter() - t0
+        sc.removeJobTag(span.tag)
+    # job and stage ends reach the store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    span.job_ids = tuple(
+        sorted(sc._jsc.sc().statusTracker().getJobIdsForTag(span.tag))
+    )
+    tracker = sc.statusTracker()
+    stage_ids: set[int] = set()
+    for jid in span.job_ids:
+        info = tracker.getJobInfo(jid)
+        stage_ids.update(info.stageIds if info else ())
+    if not stage_ids:
+        return
+    # stageList is newest first, so the walk stops at the span's oldest stage
+    first = min(stage_ids)
     it = _stage_list(spark).iterator()
-    n = w = r = sp = ib = ob = 0
-    max_id = min_stage_id_exclusive
     while it.hasNext():
         s = it.next()
         sid = s.stageId()
-        if sid > max_id:
-            max_id = sid
-        if sid <= min_stage_id_exclusive:
+        if sid < first:
+            break
+        if sid not in stage_ids or not s.numCompleteTasks():
             continue
-        n += 1
-        w += s.shuffleWriteBytes()
-        r += s.shuffleReadBytes()
-        sp += s.diskBytesSpilled() + s.memoryBytesSpilled()
-        ib += s.inputBytes()
-        ob += s.outputBytes()
-    return VolumeTotals(n, w, r, sp, ib, ob), max_id
-
-
-def volume_totals(spark) -> VolumeTotals:
-    """Cumulative stage-level data volumes for the RETAINED stages of the
-    application (bounded by ``spark.ui.retainedStages`` — prefer
-    :class:`measure_volumes` deltas for per-block numbers)."""
-    totals, _ = _collect(spark, -1)
-    return totals
-
-
-class measure_volumes:
-    """Context manager: data-volume totals for the enclosed work.
-
-    >>> with measure_volumes(spark) as m:
-    ...     df.collect()
-    >>> m.delta.shuffle_write_bytes
-
-    The delta counts ONLY stages submitted after ``__enter__`` (by stage
-    id), so concurrent history eviction cannot produce negative or
-    inflated numbers.
-    """
-
-    def __init__(self, spark):
-        self._spark = spark
-        self.delta: VolumeTotals | None = None
-
-    def __enter__(self):
-        _, self._floor = _collect(self._spark, -1)
-        return self
-
-    def __exit__(self, *exc):
-        self.delta, _ = _collect(self._spark, self._floor)
-        return False
+        span.stages += 1
+        span.tasks += s.numCompleteTasks()
+        span.input_bytes += s.inputBytes()
+        span.shuffle_read_bytes += s.shuffleReadBytes()
+        span.shuffle_write_bytes += s.shuffleWriteBytes()
+        span.spill_bytes += s.memoryBytesSpilled() + s.diskBytesSpilled()
+        span.executor_cpu_s += s.executorCpuTime() / 1e9

@@ -198,7 +198,8 @@ def publish(
     prefix keeps the staged copy out of Spark's file listing, so a crash
     leftover next to a Hive partition dir (``lang=en``) is never read as a
     partition value. The old table is renamed aside before the move, so a
-    crash between the two renames leaves it recoverable rather than gone.
+    crash between the two renames leaves it aside, and the next call
+    renames it back before reading.
     The swap is single-writer and not atomic for concurrent readers.
 
     As a snapshot table the base is the version at :func:`snapshot_current`
@@ -206,6 +207,11 @@ def publish(
     :class:`SnapshotConflict` the read, build and commit run again, up to
     ``max_retries`` times, so ``build`` must start each attempt afresh."""
     if not snapshot:
+        parent, base = os.path.split(os.path.abspath(path))
+        tmp = os.path.join(parent, f".{base}.__publish_tmp")
+        old = os.path.join(parent, f".{base}.__publish_old")
+        if not os.path.exists(path) and os.path.exists(old):
+            os.rename(old, path)  # a crash between the two renames below
         current = spark.read.parquet(path) if os.path.exists(path) else None
         out = build(current)
         if out is None:
@@ -213,9 +219,6 @@ def publish(
         if current is None:
             out.write.mode("overwrite").parquet(path)
             return path
-        parent, base = os.path.split(os.path.abspath(path))
-        tmp = os.path.join(parent, f".{base}.__publish_tmp")
-        old = os.path.join(parent, f".{base}.__publish_old")
         out.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)

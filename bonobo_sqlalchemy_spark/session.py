@@ -52,7 +52,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # no web UI: the status store that metrics.trace reads is kept
+        # without it
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Whole-stage-codegen class cache (static conf, default 100 entries).

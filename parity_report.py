@@ -12,19 +12,40 @@ Usage: python parity_report.py [sf_dir]
 from __future__ import annotations
 
 import datetime
-import os
+import hashlib
 import subprocess
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
+
+
+def stamp() -> tuple[str, str]:
+    """The short HEAD commit, and the exact stamp of the verified code (the
+    commit can only name the parent of the commit an artifact lands in): a
+    content hash of every engine source file as it is now. Every generated
+    artifact carries both; ``tests/test_registry.py`` recomputes the hash."""
+    try:
+        commit = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, cwd=ROOT,
+        ).stdout.strip()
+    except Exception:
+        commit = "?"
+    h = hashlib.sha256()
+    for p in sorted((ROOT / "bonobo_sqlalchemy_spark").rglob("*.py")) + [
+        ROOT / "__spark_entry__.py"
+    ]:
+        h.update(p.name.encode())
+        h.update(p.read_bytes())
+    return commit, h.hexdigest()[:12]
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from bonobo_sqlalchemy_spark.oracle import compare_all
-    from bonobo_sqlalchemy_spark.queries import REGISTRY
     from bonobo_sqlalchemy_spark.session import get_spark
 
     spark = get_spark(app_name="parity_report")
@@ -35,26 +56,7 @@ def main() -> None:
     n_oracle = sum(1 for r in results if r.oracle_rows >= 0)
     n_rows_only = len(results) - n_oracle
     n_fail = sum(1 for r in results if not r.ok)
-    try:
-        commit = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=Path(__file__).parent,
-        ).stdout.strip()
-    except Exception:
-        commit = "?"
-    # exact stamp of the VERIFIED code (the commit hash can only name the
-    # parent of the commit this artifact lands in): content hash of every
-    # engine source file as it existed when the sweep ran
-    import hashlib
-
-    h = hashlib.sha256()
-    root = Path(__file__).parent
-    for p in sorted((root / "bonobo_sqlalchemy_spark").rglob("*.py")) + [
-        root / "__spark_entry__.py"
-    ]:
-        h.update(p.name.encode())
-        h.update(p.read_bytes())
-    src_hash = h.hexdigest()[:12]
+    commit, src_hash = stamp()
 
     lines = [
         "# PARITY_LOCAL — full-registry oracle parity",
@@ -91,7 +93,7 @@ def main() -> None:
             lines.append(f"|   |   | ↳ {detail} |   |   |")
     lines.append("")
 
-    out = Path(__file__).parent / "PARITY_LOCAL.md"
+    out = ROOT / "PARITY_LOCAL.md"
     out.write_text("\n".join(lines))
     print(f"{len(results) - n_fail}/{len(results)} pass -> {out}")
     if n_fail:

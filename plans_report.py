@@ -18,12 +18,13 @@ from __future__ import annotations
 import datetime
 import io
 import re
-import subprocess
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from parity_report import stamp  # noqa: E402
 
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin")
 
@@ -127,26 +128,7 @@ def main() -> None:
 
     spark = get_spark(app_name="plans_report")
     names = [n for n, s in sorted(REGISTRY.items()) if s.bench]
-    try:
-        commit = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=Path(__file__).parent,
-        ).stdout.strip()
-    except Exception:
-        commit = "?"
-
-    # source-hash stamp (parity_report.py's exact loop) so staleness is
-    # checkable against the tree, not just the recording commit
-    import hashlib
-
-    h = hashlib.sha256()
-    root = Path(__file__).parent
-    for p in sorted((root / "bonobo_sqlalchemy_spark").rglob("*.py")) + [
-        root / "__spark_entry__.py"
-    ]:
-        h.update(p.name.encode())
-        h.update(p.read_bytes())
-    src_hash = h.hexdigest()[:12]
+    commit, src_hash = stamp()
 
     lines = [
         "# PLANS — physical-plan audit of the bench query set",

@@ -14,14 +14,33 @@ from __future__ import annotations
 
 import datetime
 import math
-import subprocess
+import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from parity_report import stamp  # noqa: E402
+
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+
+
+def steady(spark, name: str, sf_dir: str) -> tuple[float, int] | None:
+    """Min-of-2 seconds of one query, and the shuffle-write bytes of its
+    SECOND run, so artifact-backed queries (saved indexes, snapshots)
+    report their probe-path volume; None when the query fails."""
+    from bonobo_sqlalchemy_spark.metrics import trace
+    from bonobo_sqlalchemy_spark.queries import REGISTRY
+
+    spans = []
+    for _ in range(2):
+        try:
+            with trace(spark, name) as span:
+                REGISTRY[name].spark(spark, sf_dir).collect()
+        except Exception:
+            return None
+        spans.append(span)
+    return min(s.wall_s for s in spans), spans[-1].shuffle_write_bytes
 
 
 def main() -> None:
@@ -33,8 +52,6 @@ def main() -> None:
     # dev knob: comma-list subset for a fast dry run — prints the report to
     # stdout and does NOT write SCALING.md (a partial artifact would defeat
     # the staleness gate)
-    import os
-
     subset = os.environ.get("SPARK_GRAFT_SCALING_QUERIES")
     if subset:
         want = {s.strip() for s in subset.split(",") if s.strip()}
@@ -42,61 +59,26 @@ def main() -> None:
 
     # same trust signals bench.py carries: box load at start/end so a
     # reader can adjudicate run-to-run drift as noise vs regression
-    import os as _os
-
     try:
-        load1_start = round(_os.getloadavg()[0], 1)
+        load1_start = round(os.getloadavg()[0], 1)
     except OSError:
         load1_start = None
 
-    from bonobo_sqlalchemy_spark.metrics import measure_volumes
-
     times: dict[str, dict[str, float]] = {n: {} for n in names}
-    # steady-state shuffle-write bytes per (query, sf): taken from the
-    # SECOND run so artifact-backed queries (saved indexes, snapshots)
-    # report their probe-path volume, matching the min-of-2 time semantics
+    # steady-state shuffle-write bytes per (query, sf)
     vols: dict[str, dict[str, int]] = {n: {} for n in names}
     for sf_dir in SFS:
         sf = sf_dir.rsplit("sf", 1)[-1]
         for name in names:
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                try:
-                    with measure_volumes(spark) as m:
-                        REGISTRY[name].spark(spark, sf_dir).collect()
-                except Exception:
-                    best = None
-                    break
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            if best is not None:
-                times[name][sf] = round(best, 3)
-                vols[name][sf] = m.delta.shuffle_write_bytes
+            got = steady(spark, name, sf_dir)
+            if got is not None:
+                times[name][sf] = round(got[0], 3)
+                vols[name][sf] = got[1]
+
+    commit, src_hash = stamp()
 
     try:
-        commit = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=Path(__file__).parent,
-        ).stdout.strip()
-    except Exception:
-        commit = "?"
-
-    # source-hash stamp (parity_report.py's exact loop) so staleness is
-    # checkable against the tree, not just the recording commit
-    import hashlib
-
-    h = hashlib.sha256()
-    root = Path(__file__).parent
-    for p in sorted((root / "bonobo_sqlalchemy_spark").rglob("*.py")) + [
-        root / "__spark_entry__.py"
-    ]:
-        h.update(p.name.encode())
-        h.update(p.read_bytes())
-    src_hash = h.hexdigest()[:12]
-
-    try:
-        load1_end = round(_os.getloadavg()[0], 1)
+        load1_end = round(os.getloadavg()[0], 1)
     except OSError:
         load1_end = None
 
@@ -158,19 +140,10 @@ def main() -> None:
             "|---|---|---|---|",
         ]
         for name in names:
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                try:
-                    with measure_volumes(spark) as m:
-                        REGISTRY[name].spark(spark, str(sf1_dir)).collect()
-                except Exception:
-                    best = None
-                    break
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            if best is not None:
-                vols[name]["1.0"] = m.delta.shuffle_write_bytes
+            got = steady(spark, name, str(sf1_dir))
+            best = None if got is None else got[0]
+            if got is not None:
+                vols[name]["1.0"] = got[1]
             hi = times[name].get("0.1")
             if best is not None and hi and hi > 0:
                 a2 = math.log(best / hi) / math.log(10)
@@ -220,7 +193,8 @@ def main() -> None:
         "## Data movement (shuffle-write bytes, steady-state run)",
         "",
         "Captured from Spark's AppStatusStore around each query's second "
-        "run (`bonobo_sqlalchemy_spark/metrics.py::measure_volumes`). "
+        "run (`bonobo_sqlalchemy_spark/metrics.py::trace`: the stages of "
+        "the Spark jobs that run submitted). "
         "`beta` = log-slope of shuffle volume over the top measured "
         "decade" + (" (sf0.1 → sf1.0)." if has_sf1 else " (sf0.01 → sf0.1)."),
         "",

@@ -644,11 +644,11 @@ def test_loop_operators_pin_spark_job_counts(spark):
     adds or drops work fails here without benchmark noise. (The shuffle
     legs are left out: adaptive execution plans their joins from runtime
     sizes, and their job count varies from run to run.)"""
+    from bonobo_sqlalchemy_spark.metrics import trace
     from bonobo_sqlalchemy_spark.operators.graphalgo import (
         pagerank_personalized_integer,
     )
 
-    sc = spark.sparkContext
     df = spark.createDataFrame(
         _sym([(1, 2), (2, 3), (3, 4), (4, 5), (5, 1), (2, 5)]) + [(6, 2)],
         "src long, dst long",
@@ -663,14 +663,10 @@ def test_loop_operators_pin_spark_job_counts(spark):
         "label_propagation": lambda: label_propagation(df, lbl, rounds=4),
     }
     jobs = {}
-    try:
-        for name, call in calls.items():
-            group = f"test-graph-jobs-{name}"
-            sc.setJobGroup(group, name)
+    for name, call in calls.items():
+        with trace(spark, name) as span:
             call()
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = span.jobs
     assert jobs == {
         "pagerank_integer": 17,
         "pagerank_personalized_integer": 20,

@@ -76,26 +76,22 @@ def test_parity_artifact_lists_every_registry_query():
 )
 def test_artifact_hash_matches_head_source(artifact, regen):
     """Each standing artifact stamps a content hash of the exact engine
-    tree it verified; this test recomputes that hash (the same loop as
-    parity_report.py) over the CURRENT tree and fails on drift — so any
+    tree it verified; this test recomputes that hash (with
+    parity_report.stamp, which writes it) over the CURRENT tree and fails
+    on drift — so any
     engine-source change without a regeneration turns RED instead of
     silently shipping a stale artifact. History: the r9 PARITY snapshot
     drifted and only the judge's manual recompute caught it (round-10 fix
     covered PARITY only); in round 12 PLANS.md/SCALING.md then drifted 11
     commits with a benched query's plan changed post-stamp (r12 verdict
     action item #1) — hence ALL THREE artifacts now share the gate."""
-    import hashlib
     import re
     from pathlib import Path
 
+    from parity_report import stamp
+
     root = Path(__file__).resolve().parent.parent
-    h = hashlib.sha256()
-    for p in sorted((root / "bonobo_sqlalchemy_spark").rglob("*.py")) + [
-        root / "__spark_entry__.py"
-    ]:
-        h.update(p.name.encode())
-        h.update(p.read_bytes())
-    head_hash = h.hexdigest()[:12]
+    head_hash = stamp()[1]
     text = (root / artifact).read_text()
     m = re.search(r"engine source sha256 `([0-9a-f]{12})`", text)
     assert m, f"{artifact} carries no source-hash stamp — run `{regen}`"

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from bonobo_sqlalchemy_spark.metrics import trace
 from bonobo_sqlalchemy_spark.operators.scd2 import (
     OPEN_END,
     Scd2Sink,
@@ -122,22 +123,16 @@ def test_sink_merge_pins_spark_job_count(spark, tmp_path, snapshot):
     scan is skipped, in both publish modes. Job counts do not depend on
     timing, so a change that brings back a count action or a second join
     fails here without benchmark noise."""
-    sc = spark.sparkContext
     path = str(tmp_path / "dim")
     sink = Scd2Sink(keys=["id"], snapshot=snapshot)
     first = [(i, f"n{i}", float(i)) for i in range(100)]
     sink.write(_batch(spark, first), spark, path, "2024-01-01 00:00:00")
     # ids 25-49 unchanged, 50-99 changed, 100-124 new
     batch = _batch(spark, [(i, f"n{i}", float(i) + (i >= 50)) for i in range(25, 125)])
-    group = f"test-scd2-merge-jobs-{snapshot}"
-    try:
-        sc.setJobGroup(group, "scd2 merge")
+    with trace(spark, "scd2 merge") as span:
         sink.write(batch, spark, path, "2024-02-01 00:00:00")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert sink.last_stats == {"rows": 175, "open": 125}
-    assert jobs <= 8
+    assert span.jobs <= 8
 
 
 def test_streaming_foreachbatch_lands_in_scd2(spark, tmp_path):

@@ -20,6 +20,7 @@ from bonobo_sqlalchemy_spark import (
     run,
 )
 from bonobo_sqlalchemy_spark.constants import INSERT, UPDATE
+from bonobo_sqlalchemy_spark.metrics import trace
 
 
 @pytest.fixture()
@@ -407,22 +408,33 @@ def test_path_merge_pins_spark_job_count(spark, tmp_path):
     observed inside the write job. Job counts do not depend on timing, so
     a change that brings back a count action or a second join fails here
     without benchmark noise."""
-    sc = spark.sparkContext
     svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
     run(Graph(_golden(spark), InsertOrUpdate("t")), spark, services=svc)
     mixed = spark.createDataFrame(
         [(5, "changed"), (20, "new row")], "id int, value string"
     )
     sink = InsertOrUpdate("t")
-    group = "test-path-merge-jobs"
-    try:
-        sc.setJobGroup(group, "path merge")
+    with trace(spark, "path merge") as span:
         run(Graph(mixed, sink), spark, services=svc)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert sink.last_stats == {"insert": 1, "update": 1}
-    assert jobs <= 6
+    assert span.jobs <= 6
+
+
+def test_path_merge_recovers_a_table_left_aside_by_a_crash(spark, tmp_path):
+    """An in-place rewrite renames the old table aside before it moves the
+    new one in. A crash between the two renames leaves the table path
+    missing; the next write must put the old rows back and merge into
+    them, not create a table holding only its own batch."""
+    import os
+
+    svc = {"sqlalchemy.engine": PathService(str(tmp_path))}
+    run(Graph(_golden(spark), InsertOrUpdate("t")), spark, services=svc)
+    path = svc["sqlalchemy.engine"].table_path("t")
+    parent, base = os.path.split(os.path.abspath(path))
+    os.rename(path, os.path.join(parent, f".{base}.__publish_old"))
+    new = spark.createDataFrame([(20, "new row")], "id int, value string")
+    run(Graph(new, InsertOrUpdate("t")), spark, services=svc)
+    assert spark.read.parquet(path).count() == 10 + 1
 
 
 @pytest.mark.parametrize("snapshot", [False, True], ids=["in_place", "snapshot"])
